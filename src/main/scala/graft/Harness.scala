@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared plumbing for the driver-facing mains (Bench / Verify /
-  * ScaleProbe) so config tweaks land once, not three times. */
+/** Shared plumbing for the driver-facing mains (Bench, Verify,
+  * ConcurrentBench, PlanDump, ScaleData, SkewData) so config tweaks
+  * land once. */
 object Harness {
 
   /** Local session at SPARK_GRAFT_CPUS (default 32, the driver's target
@@ -22,10 +23,8 @@ object Harness {
       // ~20% of the run recompiling classes the cache had just evicted).
       // 5000 ≥ 2× the per-pass unique-class count, so repeat passes hit
       // the cache; entries are source-keyed generated classes, small
-      // relative to the 8g driver heap. Env-overridable so the bench
-      // A/B can measure the thrash (set 100 to reproduce the default).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // relative to the 8g driver heap.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -15,13 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `localCheckpoint` subtrees have UNKNOWN stats), and (b) harness-level
   * block cleanup between queries cannot invalidate the artifact.
   *
-  * Keys include the application id, so concurrent sessions and test
-  * suites never share artifacts across data directories.
+  * Artifacts are `Workspace` dirs of kind `mv` keyed by the application
+  * id, so concurrent sessions and test suites never share artifacts
+  * across data directories, and an application's artifacts are deleted
+  * when it ends.
   */
 object Materialize {
-  private val store =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Seconds spent building each stage (logical key → build wall time),
     * recorded by the winning builder. Bench emits this as the `stages`
     * map in BENCH_FULL.json so readers can subtract one-time pipeline
@@ -32,46 +31,22 @@ object Materialize {
   val buildSecs =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  /** Recursively delete a temp artifact dir. */
-  private def rm(dir: String): Unit = {
-    import java.nio.file._
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      // walk streams hold directory handles until closed (ADVICE r13)
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverseIterator
-        .foreach(f => Files.deleteIfExists(f))
-      finally st.close()
-    }
+  /** The stage's artifact dir, written by `write` on the first call per
+    * application. Stages nest (cluster labels build candidate pairs,
+    * itself a stage), so the build runs outside any lock; a racing
+    * duplicate build is wasted-but-identical work, Workspace keeps the
+    * first and deletes the loser's dir. */
+  private def stage(s: SparkSession, key: String)(
+      write: String => Unit): String = {
+    val t0 = System.nanoTime()
+    var built: String = null
+    val path = Workspace.once(s, "mv", key) { out => write(out); built = out }
+    if (path == built) buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
+    path
   }
 
-  // artifacts are JVM-scoped caches, not outputs — clean them up on exit
-  sys.addShutdownHook {
-    store.values.forEach(rm(_))
-  }
-
-  def once(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // NOT computeIfAbsent: stages nest (cluster labels build candidate
-    // pairs, itself a stage), and a mapping function that re-enters the
-    // map throws ConcurrentHashMap's "Recursive update" when the two
-    // keys share a bin — a per-JVM lottery. Build outside the lock;
-    // a racing duplicate build is wasted-but-identical work, putIfAbsent
-    // keeps the first and the loser's dir is deleted.
-    val k = s.sparkContext.applicationId + "|" + key
-    var path = store.get(k)
-    if (path == null) {
-      val t0 = System.nanoTime()
-      val out = java.nio.file.Files.createTempDirectory("graft_mv").toString
-      build.write.mode("overwrite").parquet(out)
-      val prev = store.putIfAbsent(k, out)
-      path = if (prev == null) {
-        buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
-        out
-      } else { rm(out); prev }
-    }
-    s.read.parquet(path)
-  }
+  def once(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    s.read.parquet(stage(s, key)(build.write.mode("overwrite").parquet(_)))
 
   /** `once` for a pipeline stage that produces TWO frames in one build
     * (e.g. a PQ index's codebook + codes): both are written under ONE
@@ -81,19 +56,10 @@ object Materialize {
     * parquet without touching the builder (by-name laziness). */
   def oncePair(s: SparkSession, key: String)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    val k = s.sparkContext.applicationId + "|" + key
-    var path = store.get(k)
-    if (path == null) {
-      val t0 = System.nanoTime()
-      val out = java.nio.file.Files.createTempDirectory("graft_mv").toString
+    val path = stage(s, key) { out =>
       val (a, b) = build
       a.write.mode("overwrite").parquet(s"$out/a")
       b.write.mode("overwrite").parquet(s"$out/b")
-      val prev = store.putIfAbsent(k, out)
-      path = if (prev == null) {
-        buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
-        out
-      } else { rm(out); prev }
     }
     (s.read.parquet(s"$path/a"), s.read.parquet(s"$path/b"))
   }

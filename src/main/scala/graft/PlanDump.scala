@@ -241,7 +241,7 @@ object PlanDump {
     // write-time stats over real parquet files (ZorderPruneSpec asserts
     // the same numbers' bounds in CI)
     locally {
-      val base = java.nio.file.Files.createTempDirectory("graft-zp").toString
+      val base = Workspace.dir(spark, "zp", sfDir)
       val zp = ops.ZorderPrune.demo(spark, sfDir, base)
       sb.append("\n## zorder_prune (file-skipping payoff, measured)\n\n")
       sb.append("One parquet file per Morton cell, per-file (pk, sk) " +

@@ -22,16 +22,15 @@ import org.apache.spark.sql.SparkSession
 object RecoveryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val ckptDir =
-      java.nio.file.Files.createTempDirectory("graft-recovery").toString
     val spark = SparkSession.builder()
       .master("local[8,2]") // 2 task attempts: retries on, like a cluster
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.graft.checkpointDir", ckptDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.graft.checkpointDir",
+      Workspace.dir(spark, "recovery", "ckpt"))
 
     val failedTasks = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * referencing it: o_custkey moves exactly as c_custkey, events.user_id
   * moves with the custkey family it joins, lineitem's three FKs move
   * with their parents). Replica i's rows are the base rows with every
-  * key column + i·stride and every payload column verbatim — the same
-  * replication protocol as ScaleProbe, extended corpus-wide.
+  * key column + i·stride and every payload column verbatim.
   *
   * This is deliberately NOT new synthetic data: a replicated corpus
   * keeps the base's value distributions and makes per-key bench ratios
@@ -69,8 +68,7 @@ object ScaleData {
       "events" -> Tables.events(spark, sfDir))
     val byName = tables.toMap
     // one stride per key family: max+1 over the base domain, so replica
-    // id ranges can never collide whatever the base corpus size (the
-    // ScaleProbe strideOf rule, per family)
+    // id ranges can never collide whatever the base corpus size
     val strides: Map[String, Long] = familyDomain.map {
       case (fam, (tbl, c)) =>
         fam -> (Option(byName(tbl).agg(max(col(c))).first().get(0))

@@ -52,10 +52,13 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame =
     fanOut(s, t(s, d, "embeddings"))
 
-  /** events.parquet carries TIMESTAMP(NANOS); Spark's parquet reader rejects
-    * nanos by default, so read them as raw longs and rebuild a (truncated)
-    * microsecond timestamp — the same value DuckDB sees after its own
-    * ns→µs handling for `date_trunc`-level work.
+  /** events.parquet carries `ts` as TIMESTAMP(MICROS) without a UTC
+    * annotation in every testdata scale, which Spark reads as
+    * TimestampNTZ; it is normalized to the session-zoned type. A
+    * TIMESTAMP(NANOS) file from elsewhere is still read: Spark's parquet
+    * reader rejects nanos by default, so they come in as raw longs and
+    * are rebuilt as a (truncated) microsecond timestamp — the same value
+    * DuckDB sees after its own ns→µs handling for `date_trunc`-level work.
     *
     * The nanos flag is carried by a CLONED session (not set/unset on the
     * caller's, which would race when two queries build plans

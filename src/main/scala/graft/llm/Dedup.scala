@@ -39,8 +39,7 @@ object Dedup {
 
   /** MinHash signatures: 8 hash slots from two md5 draws per 8-char
     * shingle (4 independent 32-bit chunks each), min-aggregated per doc.
-    * Takes any (doc_id, text) frame — shared by the keyed pipeline and
-    * the ScaleProbe replication experiment. */
+    * Takes any (doc_id, text) frame. */
   def signaturesOf(docs: DataFrame): DataFrame = {
     // Kept as codegen explode + groupBy(doc_id), deliberately NOT the
     // per-row array-transform form (r19 A/B): all 8 slots are plain
@@ -345,7 +344,7 @@ object Dedup {
     * replica scale corpus, where every doc has k−1 exact signature
     * partners) contributes ONE row per block instead of g, so the
     * candidate join's raw volume is group-size-INVARIANT: measured
-    * (SIMHASH_CANDIDATES.json, ScaleProbe over the EXACT stages below)
+    * (SIMHASH_CANDIDATES.json, over the EXACT stages below)
     * 4,711 distinct signatures and 2,315,839 raw block-join rows at
     * 1×/5×/25×/50× replica corpora ALIKE, where the per-document join
     * grew 2.8M → 70M → 1.76B over 1×/5×/25×. The contracted k²
@@ -399,9 +398,7 @@ object Dedup {
 
   /** Collapsed candidate stage of [[simhashPairsOf]]: verified
     * signature-level pairs (s1 < s2, hamming ∈ [1, 3]) over the
-    * DISTINCT signature values of `sig`. Exposed — like [[ngramPhase1]]
-    * — so ScaleProbe measures the exact shipped plan, never a
-    * probe-only re-derivation that could drift. */
+    * DISTINCT signature values of `sig`. */
   def simhashSigPairsOf(sig: DataFrame): DataFrame = {
     // byte-block pigeonhole over the DISTINCT signatures (s1 < s2
     // replaces doc_id ordering — any total order on the collapsed key
@@ -468,16 +465,13 @@ object Dedup {
     * candidates share ≥10 shingles with document frequency in [2, 20];
     * Jaccard emitted as exact floor-scaled micro units; threshold ≥ 0.3
     * applied as a pure integer comparison. */
-  /** Rare-shingle phase 1 of ngram_jaccard, exposed so ScaleProbe can
-    * measure its replication curve with the exact shipped plan (no
-    * probe-only re-derivation that could drift): returns the per-doc
+  /** Rare-shingle phase 1 of ngram_jaccard: returns the per-doc
     * DISTINCT shingle arrays (checkpointed in array form — more compact
     * than exploded rows, and phase 2 consumes the arrays directly) and
     * the ≥10-shared-rare candidate pair list.
     *
-    * Measured (`runMain graft.ScaleProbe ngram`, sf0.01 corpus
-    * replicated k×, replicas = exact near-dup groups): 1.9 s → 2.0 s →
-    * 3.3 s at k = 2/4/8 (the k=1 run absorbs JIT warmup) — runtime
+    * Measured (sf0.01 corpus replicated k×, replicas = exact near-dup
+    * groups): 1.9 s → 2.0 s → 3.3 s at k = 2/4/8 (the k=1 run absorbs JIT warmup) — runtime
     * near-linear in corpus size while candidate output follows the
     * k(k−1)/2-per-group growth near-dup data intrinsically implies
     * (553 → 2 960 → 7 844 pairs). The df∈[2,20] + ≥10-shared bounds
@@ -526,7 +520,7 @@ object Dedup {
   val ngramJaccard = QuerySpec(
     "ngram_jaccard",
     (s, d) => {
-      // phase 1 (shared with ScaleProbe's ngram curve): per-doc distinct
+      // phase 1: per-doc distinct
       // shingle arrays + rare-shingle candidate pairs
       val (arr, cand) = ngramPhase1(documents(s, d))
       // phase 2 (r20 — the minhash_sim_est array_intersect pattern):

@@ -288,7 +288,8 @@ object Similarity {
     * pivot a (cluster, dim, c) frame to d rows × k columns (c0..c_k-1),
     * zero-filling a centroid's missing dims — so the scoring scan stays
     * N·d rows with k multiply-adds in codegen instead of an N·d·k
-    * fan-out (the kmeans ScaleProbe A/B). */
+    * fan-out (measured against the fan-out layout when kmeans_lloyd
+    * was tuned). */
   private def widenByDim(cent: DataFrame, seedIds: Array[Long]): DataFrame = {
     val ks = seedIds.indices
     val slot = ks.foldLeft(lit(-1L)) { (acc, k) =>
@@ -307,9 +308,8 @@ object Similarity {
     if (ks.length == 1) col("s0") else least(ks.map(k => col(s"s$k")): _*)
 
   /** One wide-layout Lloyd ASSIGNMENT pass over `comp` against the
-    * (cluster, dim, c) centroid frame — the kmeans_lloyd loop body,
-    * extracted so the SemDeDup occupancy probe can run the IDENTICAL
-    * machinery at k ∝ corpus size (VERDICT r12 task 6). d2_k = Σq² −
+    * (cluster, dim, c) centroid frame — the kmeans_lloyd loop body.
+    * d2_k = Σq² −
     * 2·dot_k + Σc_k² over the vector's dims; Σq² is common to all k →
     * argmin over (Σc_k² − 2·dot_k) alone; first-match on ascending
     * slot order = smallest cluster id wins ties (seeds are sorted). */
@@ -334,12 +334,6 @@ object Similarity {
     comp.join(a, "vec_id")
       .groupBy("cluster", "dim")
       .agg(expr("sum(q) div count(1)").as("c"))
-
-  /** The (vec_id, dim, q) component projection of quantComponents —
-    * exposed so ScaleProbe's delta-ANN curve encodes its shard through
-    * the exact shipped stages (the ngramPhase1 no-drift rule). */
-  private[graft] def quantComponentsOf(e: DataFrame): DataFrame =
-    quantComponents(e).select("vec_id", "dim", "q")
 
   private def quantComponents(e: DataFrame): DataFrame =
     // empty vectors contribute no components: Spark's sequence(1, 0) is
@@ -884,10 +878,8 @@ object Similarity {
     * discipline, and the query batch runs purely against the STORED
     * tables (steady state touches no raw embedding except the query
     * vectors' own). The oracle is ann_pq's verbatim — the stored-index
-    * path must be row-identical to the in-session build, and
-    * AnnIndexProbe proves the same identity across a full application
-    * restart (fresh session, index reloaded from disk) with the
-    * build-vs-query seconds split recorded in ANN_INDEX.json. */
+    * path must be row-identical to the in-session build (the
+    * build-vs-query seconds split is recorded in ANN_INDEX.json). */
   val annIndexPersist = QuerySpec(
     "ann_index_persist",
     (s, d) => {
@@ -1024,57 +1016,6 @@ object Similarity {
             WHERE dr.vec_id IS NULL
             ORDER BY m.vec_id""")
   )
-
-  /** SemDeDup occupancy at the paper's own regime (VERDICT r12 task 6):
-    * the paper scales the cluster count WITH the corpus so per-cell
-    * membership stays bounded; semdedup_keep's pair join compares only
-    * same-(cell, sign-bucket) members, so its work is exactly
-    * Σ occ·(occ−1)/2 over the (cell, bucket) occupancy histogram — the
-    * quantity this probe measures and caps. Cells come from the SHIPPED
-    * Lloyd machinery (lloydAssignOf/lloydUpdateOf — the kmeans_lloyd
-    * loop, 2 iterations, seeds = k smallest non-empty vec_ids) at
-    * k = ceil(N / targetCell), so occupancy is measured under the
-    * regime the key's 100 TB story claims, not at a fixed k.
-    * Returns (n, k, cellsUsed, maxOcc, p99Occ, pairBound); `cap` is a
-    * LOUD bound on max occupancy — crossing it throws rather than
-    * letting the pair join quietly go quadratic. */
-  private[graft] def semdedupOccupancyOf(e: DataFrame, targetCell: Long,
-      cap: Long): (Long, Int, Long, Long, Long, Long) = {
-    val comp = quantComponents(e).select("vec_id", "dim", "q")
-      .localCheckpoint(false)
-    val n = comp.select("vec_id").distinct().count()
-    val k = math.max(1L, math.min(4096L,
-      (n + targetCell - 1) / targetCell)).toInt
-    val seedIds = seedIdsOf(comp, k)
-    if (seedIds.isEmpty) (0L, 0, 0L, 0L, 0L, 0L)
-    else {
-      val cent0 = comp
-        .filter(col("vec_id").isin(seedIds.map(Long.box): _*))
-        .select(col("vec_id").as("cluster"), col("dim"), col("q").as("c"))
-      val a2 = lloydAssignOf(comp,
-        lloydUpdateOf(comp, lloydAssignOf(comp, cent0, seedIds)), seedIds)
-      val occ = e
-        .withColumn("bucket",
-          expr(bucketExpr.replace("EMB", "embedding")).cast("long"))
-        .select("vec_id", "bucket")
-        .join(a2, "vec_id")
-        .groupBy("cluster", "bucket")
-        .agg(count(lit(1)).as("occ"))
-      // ONE aggregate action over the bounded (cell, bucket) histogram
-      val r = occ.agg(
-        max(col("occ")).as("max_occ"),
-        expr("percentile_approx(occ, 0.99)").as("p99_occ"),
-        sum(expr("occ * (occ - 1) div 2")).as("pair_bound"),
-        count(lit(1)).as("cells_used")).first()
-      val (mx, p99, pb, cu) =
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      require(mx <= cap,
-        s"semdedup occupancy blown: max (cell, bucket) occupancy $mx > " +
-          s"cap $cap at n=$n k=$k — the pair join is no longer bounded; " +
-          "raise k (the paper's regime) before running the key at this scale")
-      (n, k, cu, mx, p99, pb)
-    }
-  }
 
   /** Measured ANN quality contract: recall@3 of the LSH-bucket AND IVF
     * tiers against an exact ground-truth tier, per query — the

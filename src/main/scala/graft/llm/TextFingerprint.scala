@@ -261,14 +261,8 @@ private[llm] trait TextFingerprint { self: TextOps.type =>
     * and get dropped (df ∈ [2,10]) BEFORE the self-join, so bucket
     * sizes — and the pair fan-out — stay bounded no matter the corpus;
     * the only shuffles are the df count and the hash-keyed join. At
-    * 100 TB, fingerprints bucket by hash and the probe is co-located. */
-  /** The shared-passage pipeline over any (doc_id, text) frame — shared
-    * by the query key (which feeds it the materialized winnow_fp stage)
-    * and the ScaleProbe replication curve (arbitrary frames). */
-  def sharedPassagePairsOf(docs: DataFrame): DataFrame =
-    sharedPassagePairsFromFp(winnowFingerprints(docs))
-
-  /** The pairing half over an already-computed fingerprint frame. */
+    * 100 TB, fingerprints bucket by hash and the probe is co-located.
+    * `fps` is the materialized winnow_fp stage. */
   def sharedPassagePairsFromFp(fps: DataFrame): DataFrame = {
     val fp = fps
       .select(col("doc_id"), col("fp_hash")).distinct()

@@ -37,7 +37,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
   val sequencePack = QuerySpec(
     "sequence_pack",
     (s, d) => packOf(documents(s, d)),
-    // oracle below; the plan itself is packOf (shared with ScaleProbe)
+    // oracle below; the plan itself is packOf
     // oracle is deliberately WINDOW-FREE: DuckDB's parallel evaluation of
     // globally-ordered windows was observed intermittently mis-summing
     // (the window_mom_delta finding, and the CORRECTNESS_r03 hash red on
@@ -59,8 +59,8 @@ private[llm] trait TextPacking { self: TextOps.type =>
             FROM pos ORDER BY doc_id""")
   )
 
-  /** The sequence_pack plan over an arbitrary documents frame (shared
-    * with ScaleProbe's replication curve). The chunk span is derived
+  /** The sequence_pack plan over an arbitrary documents frame. The
+    * chunk span is derived
     * from the corpus key range targeting ≤ 64k chunks, so the offset
     * table is config-bounded at any corpus size — the output is
     * span-invariant (chunking only decomposes the prefix sum), so the
@@ -118,7 +118,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
   }
 
   /** Chunk span for a key domain [0, maxKey]: ceil so the chunk count
-    * never exceeds 64k. Exposed for the ScaleProbe bound printout. */
+    * never exceeds 64k. */
   def packSpanFor(maxKey: Long): Long = math.max(1L, maxKey / 65536L + 1L)
 
   /** Deterministic epoch shuffle (training-order randomization): every
@@ -242,7 +242,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
     // all-pairs (oracle-scale) for the schedule position
     Some {
       // COALESCE(..., -1): the engine's NULL-text sentinel, see
-      // interleaveWith — keeps the strict-predecessor rank total
+      // interleaveOf — keeps the strict-predecessor rank total
       val h = s"COALESCE(${md5Hex32Sql("'mix-v1:' || text")}, -1)"
       val w = s"500 + (${md5Hex32Sql("'w-v1:' || source")}) % 3 * 250"
       s"""WITH r AS (
@@ -275,37 +275,24 @@ private[llm] trait TextPacking { self: TextOps.type =>
   /** Virtual-time band width for the interleave schedule: the largest
     * per-source row count bounds the max priority at
     * maxCnt·10⁶/500 (weight floor 500 milli), and the band divides that
-    * range into ≤ 64k chunks. Exposed for the ScaleProbe bound
-    * printout. */
-  def interleaveBandFor(maxSourceCnt: Long): Long =
+    * range into ≤ 64k chunks (2000 = 10⁶ priority scale / the
+    * 500-milli weight floor). */
+  private def interleaveBandFor(maxSourceCnt: Long): Long =
     math.max(1L, (maxSourceCnt * 2000L) / 65536L + 1L)
-
-  /** Chunk count the derived band yields (2000 = 10⁶ priority scale /
-    * the 500-milli weight floor — the single place that constant lives
-    * besides interleaveBandFor). Exposed for the ScaleProbe bound
-    * printout so the probe can't desynchronize from the shipped
-    * derivation. */
-  def interleaveChunkBoundFor(maxSourceCnt: Long): Long =
-    maxSourceCnt * 2000L / interleaveBandFor(maxSourceCnt) + 1
 
   /** The band-sizing aggregate (the A10 scalar-feedback pattern): the
     * largest per-source row count; 0 on an empty corpus. */
-  def maxSourceCount(docs: DataFrame): Long =
+  private def maxSourceCount(docs: DataFrame): Long =
     Option(docs.groupBy("source").agg(count(lit(1)).as("n"))
         .agg(max(col("n"))).first().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** The source_interleave plan over an arbitrary (doc_id, source, text)
-    * frame (shared with ScaleProbe's replication curve). Band width is
-    * corpus-derived so the chunk-offset table stays config-bounded; the
-    * schedule itself is band-invariant (banding only decomposes the
-    * global rank). */
-  def interleaveOf(docs: DataFrame): DataFrame =
-    interleaveWith(docs, interleaveBandFor(maxSourceCount(docs)))
-
-  /** interleaveOf with the band precomputed (ScaleProbe times this so
-    * the sizing aggregate stays out of the measured plan). */
-  def interleaveWith(docs: DataFrame, band: Long): DataFrame = {
+    * frame. Band width is corpus-derived so the chunk-offset table stays
+    * config-bounded; the schedule itself is band-invariant (banding only
+    * decomposes the global rank). */
+  def interleaveOf(docs: DataFrame): DataFrame = {
+    val band = interleaveBandFor(maxSourceCount(docs))
     val bySrc = Window.partitionBy("source").orderBy("h", "doc_id")
     // NULL text → h = −1 (the length_bucket_pack sentinel convention):
     // real 32-bit hashes are ≥ 0, so −1 reproduces Spark's NULL-first
@@ -720,7 +707,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
         // each round's table replaces the previous one, and a lazy
         // chain would pin k vocab-sized block sets in executor memory
         // — linear growth that caps training depth (measured by the
-        // `ScaleProbe bpedepth` 3/30/300-round curve, BPE_DEPTH.json)
+        // 3/30/300-round depth curve, BPE_DEPTH.json)
         val prev = words
         words = prev
           .select(col("freq"),

@@ -25,40 +25,8 @@ import org.apache.spark.sql.functions._
   */
 object Bucketed {
 
-  /** Stale-sweep age gate: only unowned bucket-table dirs at least this
-    * old are deleted (see the sweep comment in [[tables]]). A shutdown
-    * hook removes this JVM's own dirs on clean exit, so anything older
-    * than this is a crashed run's leftover, not a live sibling's. */
-  private val SWEEP_AGE_MS = 2L * 60 * 60 * 1000
-
   private val made =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def warehousePath(s: SparkSession): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-
-  // managed-table dirs are JVM-scoped caches like Materialize artifacts;
-  // the in-memory catalog forgets them at exit, so delete the files too
-  // (a leftover non-empty dir would fail the next run's CREATE TABLE)
-  private def rm(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(dir)) {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
-
-  private val cleanup = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  sys.addShutdownHook { cleanup.forEach(rm(_)) }
-
-  // table names whose build is in flight (registered before the first
-  // write) — the sweep must treat these as live even though their key
-  // is not yet published in `made`
-  private val building =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Bucketed (orders, customer) table names for this (application, data
     * dir), written once. Both sides use the SAME bucket count on the join
@@ -67,12 +35,12 @@ object Bucketed {
     * with bucket assignment so each task emits one file per bucket it
     * owns instead of numBuckets files per task. */
   def tables(s: SparkSession, d: String): (String, String) =
-    // computeIfAbsent, NOT get + putIfAbsent: the side effects (stale-dir
-    // sweep + saveAsTable(Overwrite)) must run exactly once per key — two
+    // computeIfAbsent, NOT get + putIfAbsent: the side effect
+    // (saveAsTable(Overwrite)) must run exactly once per key — two
     // racing threads past a null check would both overwrite the same
     // table dirs concurrently and could corrupt the bucketed write.
-    // The lambda only READS `made` (the live-set snapshot), so the
-    // no-recursive-update rule of computeIfAbsent is respected.
+    // The lambda never touches `made`, so the no-recursive-update rule
+    // of computeIfAbsent is respected.
     made.computeIfAbsent(s.sparkContext.applicationId + "|" + d, { key =>
       // table identifiers must be [a-z0-9_]; key carries '|', '-', '/'.
       // md5, not a char sum: a positional hash can't collide on
@@ -81,61 +49,18 @@ object Bucketed {
         .digest(key.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
       val oTbl = s"graft_orders_bkt_$tag"
       val cTbl = s"graft_customer_bkt_$tag"
-      // sweep stale dirs from crashed previous runs before creating —
-      // but never a dir some OTHER key in this JVM is still serving OR
-      // currently building: computeIfAbsent publishes to `made` only
-      // after the lambda returns, so a concurrent build for a DIFFERENT
-      // key is invisible in `made.values` — `building` registers names
-      // BEFORE any write so another key's sweep can't delete them
-      // mid-saveAsTable
-      import scala.jdk.CollectionConverters._
-      building.add(oTbl); building.add(cTbl)
-      val live = made.values.asScala.flatMap(t => Seq(t._1, t._2)).toSet ++
-        building.asScala
-      val wh = warehousePath(s)
-      // cross-PROCESS safety (round-14 finding): the tag embeds the
-      // applicationId, so a CONCURRENT graft JVM's live tables are never
-      // in this JVM's `live` set — an unconditional sweep deleted a
-      // running Bench's tables mid-pass when a full Verify ran beside it
-      // (FAILED_READ_FILE.FILE_NOT_EXIST on passes 2-3). Age-gate the
-      // sweep: only dirs older than SWEEP_AGE_MS are candidates. Crashed
-      // leftovers from previous rounds are hours old; any table a live
-      // sibling JVM could still be reading is younger than its own
-      // session. The gate trades at most one stale dir-pair of disk for
-      // eliminating the cross-process delete race.
-      val cutoff = System.currentTimeMillis() - SWEEP_AGE_MS
-      if (java.nio.file.Files.exists(wh)) {
-        val ls = java.nio.file.Files.list(wh)
-        try ls.forEach { p =>
-          val n = p.getFileName.toString
-          if ((n.startsWith("graft_orders_bkt_") ||
-               n.startsWith("graft_customer_bkt_")) && !live.contains(n) &&
-              java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff)
-            rm(p)
-        }
-        finally ls.close()
-      }
-      // on FAILURE the names must leave `building`, or the half-written
-      // dirs stay permanently classified as live in this JVM and a retry
-      // for the same tag could never sweep its own stale output. On
-      // success they deliberately STAY registered: `made` publishes only
-      // after computeIfAbsent returns, so removing here would reopen the
-      // window where another key's sweep sees the dirs in neither set —
-      // the set grows 2 names per successful build, bounded by the keys
-      // built in this JVM (which `made` retains anyway)
-      try {
-        orders(s, d).repartition(8, col("o_custkey"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .saveAsTable(oTbl)
-        customer(s, d).repartition(8, col("c_custkey"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .saveAsTable(cTbl)
-      } catch { case t: Throwable =>
-        building.remove(oTbl); building.remove(cTbl); throw t
-      }
-      Seq(oTbl, cTbl).foreach(t => cleanup.add(wh.resolve(t)))
+      // external tables in a Workspace dir: their files are deleted when
+      // the application ends, so no run leaves a stale table dir behind
+      // to fail a later CREATE TABLE or to be swept from under a live one
+      val dir = graft.Workspace.dir(s, "bkt", d)
+      orders(s, d).repartition(8, col("o_custkey"))
+        .write.mode(SaveMode.Overwrite).option("path", s"$dir/orders")
+        .bucketBy(8, "o_custkey").sortBy("o_custkey")
+        .saveAsTable(oTbl)
+      customer(s, d).repartition(8, col("c_custkey"))
+        .write.mode(SaveMode.Overwrite).option("path", s"$dir/customer")
+        .bucketBy(8, "c_custkey").sortBy("c_custkey")
+        .saveAsTable(cTbl)
       (oTbl, cTbl)
     })
 

@@ -189,9 +189,8 @@ object Graph {
     * shuffle_hash joins. */
   /** Degree-ordered orientation of an undirected (s1, s2) edge frame:
     * each edge points low-degree → high-degree (ties by id) as (u, v).
-    * Checkpointed — both the wedge and close joins scan it. Exposed for
-    * ScaleProbe's wedge-count accounting. */
-  private[graft] def orientedOf(edges: DataFrame): DataFrame = {
+    * Checkpointed — both the wedge and close joins scan it. */
+  private def orientedOf(edges: DataFrame): DataFrame = {
     val deg = edges.select(col("s1").as("node"))
       .union(edges.select(col("s2")))
       .groupBy("node").agg(count(lit(1)).as("dg"))
@@ -212,8 +211,8 @@ object Graph {
 
   /** Per-node triangle counts over any undirected (s1, s2) edge frame —
     * the SHIPPED triangle pipeline, parameterized over its edge source so
-    * the spec (co-purchase graph) and ScaleProbe's replication curve run
-    * the identical plan. */
+    * the key (co-purchase graph) and StatsGraphSpec's sharded-bloom case
+    * run the identical plan. */
   private[graft] def triangleCountOf(edges: DataFrame): DataFrame = {
     val oriented = orientedOf(edges)
     // Bloom-prune the wedge stream BEFORE the close join's exchange
@@ -601,9 +600,9 @@ object Graph {
       .groupBy("node").agg(min(col("d")).as("d"))
 
   /** The BFS frontier loop, over any (src, dst) edge frame and a (node)
-    * seed frame — shared by graph_bfs_levels and ScaleProbe's bfs
-    * node-count curve: each round is one [[bfsStep]], so after round r
-    * every node at true distance ≤ r holds that distance (monotone,
+    * seed frame, as graph_bfs_levels runs it: each round is one
+    * [[bfsStep]], so after round r every node at true distance ≤ r
+    * holds that distance (monotone,
     * exact). Runs through the shared convergence iterator: the reached
     * set only grows and a node's distance is exact the round it first
     * appears, so "no new node" is an exact fixed-point witness — the

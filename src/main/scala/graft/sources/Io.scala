@@ -93,39 +93,20 @@ object Io {
   def appendFacts(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).partitionBy("year").parquet(path)
 
-  /** S3 under the driver gate: the load path itself is the thing being
-    * verified (reference loadAnalyticsDB.R:106-134 — half its code is the
-    * write side). The fact build is written through the production sink
-    * (year-partitioned, file-size-capped), read back off disk, and
-    * re-aggregated; the oracle computes the same rollup from the raw
-    * sources — so a bug anywhere in write partitioning, file layout, or
-    * read-back typing breaks the hash. `year` comes back as a partition
-    * directory value (int) → normalized to BIGINT. */
-  // one sink dir per (application, data dir): repeat invocations (schema
-  // probes, bench + verify in one JVM) overwrite the same dir instead of
-  // leaking a fresh fact copy each time
-  private val sinkDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The other two source formats under the driver gate, same pattern as
     * the parquet/JDBC round-trips: the dim is pushed out through the
     * engine's writer and read back through its schema-on-read path, so a
     * serialization, header, quoting or type-mapping bug in either
     * direction breaks the hash against the parquet-derived oracle. CSV
     * reads with the DECLARED StructType from the model.Schemas catalog
-    * (never inferSchema — one pass saved, drift caught at read time). */
-  private val fmtDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def fmtDir(s: SparkSession, which: String, d: String): String =
-    fmtDirs.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + which + "|" + d,
-      _ => java.nio.file.Files.createTempDirectory(s"graft_$which").toString)
-
+    * (never inferSchema — one pass saved, drift caught at read time).
+    * Every round-trip sink is one Workspace dir per (application, data
+    * dir): repeat invocations (schema probes, bench + verify in one JVM)
+    * overwrite the same dir instead of leaking a fresh copy each time. */
   val orcRoundtrip = QuerySpec(
     "orc_roundtrip",
     (s, d) => {
-      val out = fmtDir(s, "orc", d) + "/dim_location"
+      val out = graft.Workspace.dir(s, "orc", d) + "/dim_location"
       writeOrc(graft.etl.StarSchema.dimLocation(s, d), out)
       readOrc(s, out).orderBy("location_key")
     },
@@ -138,7 +119,7 @@ object Io {
   val csvRoundtrip = QuerySpec(
     "csv_roundtrip",
     (s, d) => {
-      val out = fmtDir(s, "csv", d) + "/dim_location"
+      val out = graft.Workspace.dir(s, "csv", d) + "/dim_location"
       writeCsv(graft.etl.StarSchema.dimLocation(s, d), out)
       readCsv(s, out, graft.model.Schemas.dimLocation)
         .orderBy("location_key")
@@ -157,7 +138,7 @@ object Io {
   val jsonRoundtrip = QuerySpec(
     "json_roundtrip",
     (s, d) => {
-      val out = fmtDir(s, "json", d) + "/dim_product"
+      val out = graft.Workspace.dir(s, "json", d) + "/dim_product"
       writeJsonLines(graft.etl.StarSchema.dimProduct(s, d), out)
       readJsonLines(s, out, graft.model.Schemas.dimProduct)
         .orderBy("product_key")
@@ -179,22 +160,14 @@ object Io {
     * oracle recomputes from the parquet source, so a type-mapping or
     * range-split bug anywhere in the JDBC write/read path breaks the
     * hash. Derby types round-trip as BIGINT/VARCHAR→LongType/StringType. */
-  private val jdbcDbs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   val jdbcRoundtrip = QuerySpec(
     "jdbc_dim_roundtrip",
     (s, d) => {
-      val db = jdbcDbs.computeIfAbsent(
-        s.sparkContext.applicationId + "|" + d,
-        _ => {
-          val dir = java.nio.file.Files.createTempDirectory("graft_derby")
-          // keep Derby's log file out of the process working directory
-          System.setProperty("derby.stream.error.file",
-            dir.resolve("derby.log").toString)
-          dir.resolve("db").toString
-        })
-      val url = s"jdbc:derby:$db;create=true"
+      val dir = graft.Workspace.once(s, "derby", d) { dir =>
+        // keep Derby's log file out of the process working directory
+        System.setProperty("derby.stream.error.file", s"$dir/derby.log")
+      }
+      val url = s"jdbc:derby:$dir/db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       s.read.parquet(s"$d/nation.parquet")
@@ -212,12 +185,18 @@ object Io {
             FROM nation ORDER BY nation_key""")
   )
 
+  /** S3 under the driver gate: the load path itself is the thing being
+    * verified (reference loadAnalyticsDB.R:106-134 — half its code is the
+    * write side). The fact build is written through the production sink
+    * (year-partitioned, file-size-capped), read back off disk, and
+    * re-aggregated; the oracle computes the same rollup from the raw
+    * sources — so a bug anywhere in write partitioning, file layout, or
+    * read-back typing breaks the hash. `year` comes back as a partition
+    * directory value (int) → normalized to BIGINT. */
   val writeRoundtrip = QuerySpec(
     "fact_write_roundtrip",
     (s, d) => {
-      val out = sinkDirs.computeIfAbsent(
-        s.sparkContext.applicationId + "|" + d,
-        _ => java.nio.file.Files.createTempDirectory("graft_fact_rt").toString)
+      val out = graft.Workspace.dir(s, "fact_rt", d)
       // source = the materialized fact (the warehouse artifact every
       // report queries) — the thing under test here is the SINK path.
       // Cluster the shuffle by (partition column, content salt): year

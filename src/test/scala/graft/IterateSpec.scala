@@ -74,7 +74,7 @@ class IterateSpec extends SparkSpec {
     // executor loss — localCheckpoint blocks do not), and each round's
     // files are deleted once the next round lands, so exactly the final
     // round's rdd-* directory remains on disk when the loop returns
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("ckpt")
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")

@@ -27,7 +27,7 @@ class AnnIndexSpec extends SparkSpec {
   test("the stored index alone answers queries (no raw-corpus recompute)") {
     // the query path must work from NOTHING but the two persisted frames
     // plus the query vectors — round-trip them through parquet explicitly
-    val dir = java.nio.file.Files.createTempDirectory("annidx_spec").toString
+    val dir = tempDir("annidx")
     val (cb, cd) = Similarity.pqIndexFramesOf(graft.Tables.embeddings(spark, sf))
     cb.write.mode("overwrite").parquet(s"$dir/codebook")
     cd.write.mode("overwrite").parquet(s"$dir/codes")
@@ -52,7 +52,7 @@ class AnnIndexSpec extends SparkSpec {
         (((i * 31 + j * 17) % 19) - 9) / 10.0f)
       (i.toLong, v, i % 5)
     }
-    val dir = java.nio.file.Files.createTempDirectory("annsamp").toString
+    val dir = tempDir("annsamp")
     vecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -83,7 +83,7 @@ class AnnIndexSpec extends SparkSpec {
     // calibration corpus as its OWN corpus directory and run the
     // public per-key pipelines over it — the key's internal
     // restriction must equal "the tiers on the sampled corpus"
-    val esDir = java.nio.file.Files.createTempDirectory("annsamp_es").toString
+    val esDir = tempDir("annsamp_es")
     esVecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$esDir/embeddings.parquet")
 

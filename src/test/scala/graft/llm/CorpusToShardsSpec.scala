@@ -43,7 +43,7 @@ class CorpusToShardsSpec extends graft.SparkSpec {
     // write the selected docs as a documents table and run the SHIPPED
     // shard_manifest key over it — the composed key's manifest columns
     // (minus the pack-stage start_bins) must match row for row
-    val tmp = java.nio.file.Files.createTempDirectory("graft_c2s").toString
+    val tmp = tempDir("c2s")
     selected.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val standalone = graft.SparkEntry.queries("shard_manifest")(spark, tmp)
       .collect().map(_.toSeq).toSeq

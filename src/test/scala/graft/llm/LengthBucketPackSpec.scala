@@ -70,7 +70,7 @@ class LengthBucketPackSpec extends SparkSpec {
 
   test("NULL text lands in the explicit -1 sentinel bucket, not bucket 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lbp_null").toString
+    val dir = tempDir("lbp_null")
     Seq((0L, null.asInstanceOf[String], "en", "t", 0L),
         (1L, "three token doc", "en", "t", 15L),
         (2L, "two tokens", "en", "t", 10L))

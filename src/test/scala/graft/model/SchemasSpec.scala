@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.etl.StarSchema
 import graft.sources.Io
 import org.apache.spark.sql.types.StructType
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The declared-schema catalog (S5) is live, not documentation: every
   * star-schema builder must produce exactly the declared column
@@ -26,7 +26,7 @@ class SchemasSpec extends SparkSpec {
   }
 
   test("film-payments landing zone: declared schema drives CSV ingestion") {
-    val dir = Files.createTempDirectory("land")
+    val dir = Paths.get(tempDir("land"))
     val csv =
       """payment_id,customer_id,film_id,amount,payment_date,country,city
         |1,10,100,4.99,2005-05-24 22:53:30,India,Agra
@@ -42,7 +42,7 @@ class SchemasSpec extends SparkSpec {
   }
 
   test("music landing zone: declared schema drives JSON-lines ingestion") {
-    val dir = Files.createTempDirectory("landj")
+    val dir = Paths.get(tempDir("landj"))
     val json =
       """{"invoice_line_id":100,"invoice_id":10,"customer_id":1,"track_id":7,"unit_price":0.99,"quantity":2,"invoice_date":"2009-01-01T00:00:00Z","country":"Brazil","city":"São Paulo"}
         |{"invoice_line_id":101,"invoice_id":10,"customer_id":1,"track_id":8,"unit_price":1.99,"quantity":1,"invoice_date":"2009-01-01T00:00:00Z","country":"Brazil","city":"São Paulo"}

@@ -89,7 +89,7 @@ class ParitySemanticsSpec extends SparkSpec {
     // (replicated corpus, re-delivered extract) must not mint per-row
     // keys — and row_number over a non-unique ORDER BY would be a
     // tie-order lottery besides
-    val dir = java.nio.file.Files.createTempDirectory("graft-dupnat").toString
+    val dir = tempDir("dupnat")
     val nat = spark.read.parquet(s"$sf/nation.parquet")
     nat.unionByName(nat.withColumn("n_nationkey", $"n_nationkey" + lit(100)))
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")

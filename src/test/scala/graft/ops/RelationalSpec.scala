@@ -214,7 +214,7 @@ class RelationalSpec extends SparkSpec {
     // systems) must not duplicate (region, day) spine rows — the spine
     // is the value domain, not the dimension row set
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dupdim").toString
+    val dir = tempDir("dupdim")
     for (t <- Seq("nation", "customer", "orders"))
       spark.read.parquet(s"$sf/$t.parquet")
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")

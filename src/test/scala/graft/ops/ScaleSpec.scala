@@ -2,28 +2,11 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.Tables
-import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
-/** Scale-utility semantics: salting must not change join results;
-  * bucketed co-located joins must not shuffle; sketches must land within
-  * tolerance of exact answers. */
+/** Scale layout semantics: bucketed co-located joins must not shuffle. */
 class ScaleSpec extends SparkSpec {
   lazy val s = spark
   import s.implicits._
-
-  test("salted join == plain join on skewed data") {
-    // 90% of the big side hits one key — the shape that melts a reducer
-    val big = spark.range(0, 10000)
-      .select(when($"id" % 10 === 0, $"id" % 7).otherwise(lit(3L)).as("k"),
-              $"id".as("v"))
-    val small = Seq((0L, "a"), (1L, "b"), (2L, "c"), (3L, "hot"),
-                    (4L, "e"), (5L, "f"), (6L, "g")).toDF("k", "name")
-    val plain = big.join(small, "k").agg(count(lit(1)), sum($"v")).first()
-    val salted = Scale.saltedJoin(big, small, "k", 8)
-      .agg(count(lit(1)), sum($"v")).first()
-    assert(plain == salted)
-  }
 
   test("bucketed tables co-locate: join plans without a shuffle exchange") {
     // warehouse dir is a static conf — SparkSpec points it at a tmp dir
@@ -42,17 +25,5 @@ class ScaleSpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning"),
       s"bucketed join still shuffles:\n$p")
     assert(joined.count() == lineitem.count())
-  }
-
-  test("approx sketches land within tolerance of exact answers") {
-    val o = Tables.orders(spark, sf)
-    val exact = o.select(count_distinct($"o_custkey")).first().getLong(0)
-    val approx = o.select(Scale.approxDistinct($"o_custkey")).first().getLong(0)
-    assert(math.abs(approx - exact).toDouble / exact < 0.1,
-      s"approx=$approx exact=$exact")
-    val Array(p50) = o.stat.approxQuantile("o_totalprice", Array(0.5), 0.01)
-    val med = o.select(Scale.approxPercentiles($"o_totalprice", Seq(0.5)))
-      .first().getSeq[Double](0).head
-    assert(math.abs(med - p50) / p50 < 0.05)
   }
 }

@@ -4,7 +4,6 @@ import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths}
 
 /** Semantic-quality checks for the statistics/graph operators — the
   * oracle gate proves Spark≡DuckDB, these prove the operators compute
@@ -76,7 +75,7 @@ class StatsGraphSpec extends SparkSpec {
   }
 
   test("zscore_outliers: flags exactly the planted outlier") {
-    val dir = Files.createTempDirectory("graft_zscore").toString
+    val dir = tempDir("zscore")
     // nation table: 2 nations
     spark.createDataFrame(
       java.util.Arrays.asList(Row(0, "AAA", 0), Row(1, "BBB", 0)),
@@ -102,7 +101,7 @@ class StatsGraphSpec extends SparkSpec {
   }
 
   test("kmeans_lloyd: a planted far cluster consolidates on its seed") {
-    val dir = Files.createTempDirectory("graft_km").toString
+    val dir = tempDir("km")
     def vec(base: Float, jitter: Float): Seq[Float] =
       Seq.fill(8)(base).zipWithIndex.map { case (v, i) => v + jitter * i }
     // seeds 0..6 sit near (+10); seed 7 is the lone (−10) seed; vectors

@@ -9,7 +9,7 @@ import graft.SparkSpec
 class ZorderPruneSpec extends SparkSpec {
 
   test("2-D predicate: stats skip ≥3/4 of z-ordered files, ~none of unclustered; pruned ≡ full") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zp").toString
+    val base = tempDir("zp")
     val demo = ZorderPrune.demo(spark, sf, base)
     // the corpus populates (nearly) all 16 bit-aligned cells
     assert(demo.totalFiles >= 8, s"degenerate layout: $demo")

@@ -3,7 +3,6 @@ package graft.sources
 import graft.SparkSpec
 import graft.etl.StarSchema
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Round-trip + pruning behavior of the source/sink layer. */
 class IoSpec extends SparkSpec {
@@ -11,7 +10,7 @@ class IoSpec extends SparkSpec {
   import s.implicits._
 
   test("fact write partitioned by year enables partition pruning") {
-    val out = Files.createTempDirectory("fact_out").toString
+    val out = tempDir("fact_out")
     val fact = StarSchema.factSales(spark, sf)
     Io.writeFactPartitioned(fact, out)
     val back = spark.read.parquet(out)
@@ -27,7 +26,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("overwrite is full-reload idempotent (drop/recreate semantics)") {
-    val out = Files.createTempDirectory("dim_out").toString
+    val out = tempDir("dim_out")
     val dim = StarSchema.dimLocation(spark, sf)
     Io.writeDim(dim, out)
     Io.writeDim(dim, out) // second run must not duplicate
@@ -35,7 +34,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("csv and json round-trip with explicit schema") {
-    val dir = Files.createTempDirectory("io_rt")
+    val dir = tempDir("io_rt")
     // quotes and commas in values exercise the writer's escaping (the
     // reference escaped by hand)
     val df = Seq((1L, "a,b \"quoted\"", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
@@ -50,7 +49,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("orc round-trips the fact build with pushdown intact") {
-    val out = Files.createTempDirectory("orc_out").toString
+    val out = tempDir("orc_out")
     val fact = StarSchema.factSales(spark, sf)
     Io.writeOrc(fact, out)
     val back = Io.readOrc(spark, out)
@@ -65,7 +64,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("streaming foreachBatch appends facts incrementally") {
-    val out = Files.createTempDirectory("fact_append").toString
+    val out = tempDir("fact_append")
     val fact = StarSchema.factSales(spark, sf).limit(100)
     Io.appendFacts(fact, out)
     Io.appendFacts(fact, out)

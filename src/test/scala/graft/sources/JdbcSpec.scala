@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.etl.StarSchema
-import java.nio.file.Files
 import java.util.Properties
 
 /** The row-store half of the source surface (reference S1/S3: SQLite in,
@@ -14,10 +13,9 @@ class JdbcSpec extends SparkSpec {
 
   private lazy val url = {
     // keep Derby's log out of the repo root
-    System.setProperty("derby.stream.error.file",
-      Files.createTempDirectory("derby-log").resolve("derby.log").toString)
-    val dir = Files.createTempDirectory("derby-db").resolve("db")
-    s"jdbc:derby:$dir;create=true"
+    val dir = tempDir("derby")
+    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
+    s"jdbc:derby:$dir/db;create=true"
   }
 
   test("dimension write + read round-trips through the row store") {

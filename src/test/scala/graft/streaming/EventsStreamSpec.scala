@@ -111,7 +111,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("foreachBatch + appendFacts: incremental partitioned fact maintenance") {
     implicit val sctx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("stream_fact").toString
+    val out = tempDir("stream_fact")
     val stream = MemoryStream[Ev]
     val q = stream.toDF()
       .withColumn("year", year($"ts"))
