@@ -120,7 +120,7 @@ object Bench {
         try Harness.exhaust(fn(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-        Harness.sweepBlocks(spark)
+        Pin.sweep(spark)
         if (wi == 1)
           warmupKeyClasses(name) =
             warmupKeyClasses.getOrElse(name, 0L) + (cgClassCount - c0)
@@ -160,7 +160,7 @@ object Bench {
               System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
             }
           val (r1, w1, s1) = byteSnap()
-          Harness.sweepBlocks(spark)
+          Pin.sweep(spark)
           (name, secs, (r1 - r0, w1 - w0, s1 - s0))
         }
         passClassDeltas += cgClassCount - pc0

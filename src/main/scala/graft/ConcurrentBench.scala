@@ -53,11 +53,11 @@ object ConcurrentBench {
 
     // warmup: codegen + one-time Materialize builds land here
     fns.foreach { case (n, f) => runOne(n, f) }
-    Harness.sweepBlocks(spark)
+    Pin.sweep(spark)
 
     val repsOut = (1 to reps).map { _ =>
       val serial = fns.map { case (n, f) => n -> runOne(n, f) }
-      Harness.sweepBlocks(spark)
+      Pin.sweep(spark)
       val serialSum = serial.map(_._2).sum
       val t0 = System.nanoTime()
       val threads = fns.zipWithIndex.map { case ((n, f), i) =>
@@ -74,7 +74,7 @@ object ConcurrentBench {
       }
       threads.foreach(_.join())
       val concWall = (System.nanoTime() - t0) / 1e9
-      Harness.sweepBlocks(spark)
+      Pin.sweep(spark)
       (serialSum, concWall)
     }
 

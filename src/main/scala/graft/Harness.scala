@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the driver-facing mains (Bench, Verify,
   * ConcurrentBench, PlanDump, ScaleData, SkewData) so config tweaks
-  * land once. */
+  * land once: the session and the noop sink. Freeing a key's pins
+  * between keys is [[Pin.sweep]]. */
 object Harness {
 
   /** Local session at SPARK_GRAFT_CPUS (default 32, the driver's target
@@ -31,12 +32,8 @@ object Harness {
     s
   }
 
-  /** Free localCheckpoint blocks between queries — they are not
-    * CacheManager-tracked, so they'd otherwise sit in the BlockManager
-    * for the rest of the JVM and squeeze later queries' memory. */
-  def sweepBlocks(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+  /** [[Pin.sweep]] under the name the benchmark harness calls. */
+  def sweepBlocks(s: SparkSession): Unit = Pin.sweep(s)
 
   /** Execute a frame's FULL plan and discard the rows (the built-in
     * `noop` v2 sink). The bench action must never be `count()`:

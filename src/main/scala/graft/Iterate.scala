@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.bridge
 
 /** THE convergence-driven fixed-point loop behind every iterative
   * dataflow in the engine — connected-components label propagation
@@ -9,15 +8,13 @@ import org.apache.spark.sql.graft.bridge
   * frontier expansion (ops/Graph.bfsFrom), and pointer-doubling
   * ancestor closures (ops/Graph.ptrRollup, hierarchyRollup).
   *
-  * Each round: run `step`, EAGERLY checkpoint the result — local by
-  * default, reliable under `spark.graft.checkpointDir` (see
-  * [[Iterate.checkpoint]]); a lazy checkpoint is re-planned per action
-  * under AQE, so an iterative loop would recompute every previous
-  * round's lineage — measured 168 s vs
-  * ~8 s at sf0.1 on the cluster loop), evaluate the caller's change
-  * metric on the already-materialized frame (one cheap scan job — no
-  * recomputation), free the previous round's blocks, and stop as soon
-  * as the metric hits zero or `maxRounds` runs out.
+  * Each round: run `step`, pin the result with [[Pin.now]] —
+  * materialized before the previous round's copy is freed, which a
+  * lazy pin would recompute from the loop's whole lineage (measured
+  * 168 s vs ~8 s at sf0.1 on the cluster loop) — evaluate the caller's
+  * change metric on the materialized frame (one cheap scan job), free
+  * the previous round's copy, and stop as soon as the metric hits zero
+  * or `maxRounds` runs out.
   *
   * Early stop is EXACT for every loop in this engine: each step is a
   * deterministic function of the previous frame, so a round that
@@ -36,80 +33,27 @@ import org.apache.spark.sql.graft.bridge
   * value-mutating loops supply their own (a node-sized join, or a
   * carried `prev` column as clusterLabels does).
   *
-  * The returned frame is checkpointed (its blocks are the caller's to
-  * free once consumed — the Bench/Verify harness sweeps them between
-  * keys); `rounds` counts executed steps INCLUDING the one that
-  * detected convergence, so a diameter-3 BFS reports 4.
+  * The returned frame is pinned (its copy is the caller's to free once
+  * consumed — the Bench/Verify harness sweeps it between keys);
+  * `rounds` counts executed steps INCLUDING the one that detected
+  * convergence, so a diameter-3 BFS reports 4.
   */
 object Iterate {
-  /** Loop result: the final (checkpointed) frame, how many steps ran,
+  /** Loop result: the final (pinned) frame, how many steps ran,
     * and whether the change metric hit zero before `maxRounds`. */
   final case class Fixed(df: DataFrame, rounds: Int, converged: Boolean)
-
-  /** Durability switch for the loop's per-round materialization.
-    * `spark.graft.checkpointDir` UNSET (the default — right for
-    * local[32] and the bench harness): `localCheckpoint`, executor-
-    * local blocks, fastest, but lineage-truncated state dies with its
-    * executor — an executor loss kills the whole iterative job. SET (a
-    * shared filesystem path — HDFS/S3 on a real cluster): an EAGER
-    * RELIABLE `checkpoint()` into that directory, so a preempted
-    * executor costs one task re-read instead of the job; the loop
-    * frees each round's files as soon as the next round lands
-    * (bridge.freeCheckpoint), bounding the footprint to two rounds'
-    * state, not the loop's history. */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val d = withInjectedFault(df)
-    s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
-      case Some(dir) =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(dir)
-        d.checkpoint()
-      case None => d.localCheckpoint()
-    }
-  }
-
-  /** Fault injection for the recovery demonstration (graft.RecoveryProbe):
-    * with `spark.graft.failInject.atCheckpoint` = N set, the Nth
-    * [[checkpoint]] materialization in this JVM kills the FIRST attempt
-    * of its partition-0 task — the canonical mid-iteration executor-loss
-    * shape. Requires a task-retrying master (`local[n,2]` locally;
-    * any real cluster) to complete; under the default `local[n]` the
-    * induced failure fails the job, which is itself the documented
-    * localCheckpoint-mode behavior the reliable-checkpoint conf exists
-    * to fix. Unset (production), the only cost is one conf lookup. */
-  private val ckptCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def resetFaultInjection(): Unit = ckptCalls.set(0)
-  private def withInjectedFault(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    s.conf.getOption("spark.graft.failInject.atCheckpoint")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption) match {
-      case Some(n) if ckptCalls.incrementAndGet() == n =>
-        // RDD detour (plan-breaking, injection path only): the throw must
-        // live INSIDE the materialization job's tasks, where a retry
-        // reruns it with attemptNumber > 0
-        s.createDataFrame(df.rdd.mapPartitions { it =>
-          val tc = org.apache.spark.TaskContext.get()
-          if (tc != null && tc.partitionId() == 0 && tc.attemptNumber() == 0)
-            throw new RuntimeException(
-              "graft.Iterate fault injection: first attempt of partition 0")
-          it
-        }, df.schema)
-      case _ => df
-    }
-  }
 
   def fixpoint(init: DataFrame, maxRounds: Int)
       (step: DataFrame => DataFrame)
       (changed: (DataFrame, DataFrame) => Long): Fixed = {
-    var cur = checkpoint(init)
+    var cur = Pin(init)
     var r = 0
     var conv = false
     while (r < maxRounds && !conv) {
-      val next = checkpoint(step(cur))
+      val next = Pin.now(step(cur))
       r += 1
       conv = changed(cur, next) == 0L
-      bridge.freeCheckpoint(cur)
+      Pin.free(cur)
       cur = next
     }
     Fixed(cur, r, conv)

@@ -10,10 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a production dedup run computes signatures/candidate pairs once and
   * both the pair listing and the clustering consume them. Recomputing a
   * stage per downstream query key would misrepresent that architecture
-  * (and at 100 TB would be unaffordable). Parquet rather than cached
-  * blocks so (a) re-reads have real statistics for the planner (cached
-  * `localCheckpoint` subtrees have UNKNOWN stats), and (b) harness-level
-  * block cleanup between queries cannot invalidate the artifact.
+  * (and at 100 TB would be unaffordable). Parquet rather than a `Pin`
+  * copy so (a) re-reads have measured file sizes for the planner (a pin
+  * keeps the optimizer's estimate: `LogicalRDD.fromDataset` →
+  * `rewriteStatsAndConstraints`), and (b) harness-level block cleanup
+  * between queries cannot invalidate the artifact.
   *
   * Artifacts are `Workspace` dirs of kind `mv` keyed by the application
   * id, so concurrent sessions and test suites never share artifacts

@@ -101,7 +101,7 @@ object PlanDump {
           "the final ORDER BY's range partitioning."),
       "bpe_sequence_pack" ->
         ("Tokenizer-true packing: the BPE encode is pinned below ONE " +
-          "eager checkpoint (the input scan above it is ExistingRDD — " +
+          "Pin (the input scan above it is ExistingRDD — " +
           "no documents re-scan per downstream action), and the " +
           "packing keeps the two-level prefix-sum discipline: the " +
           "corpus-wide window is PARTITIONED by chunk, only the " +

@@ -4,13 +4,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Failure-recovery demonstration for the reliable-checkpoint mode
-  * (RECOVERY.json): IterateSpec proves the checkpoint files exist; this
+  * (RECOVERY.json): PinSpec proves the checkpoint files exist; this
   * probe proves they buy RECOVERY. It runs `graph_pagerank` twice under
   * `spark.graft.checkpointDir` on a task-retrying master (`local[8,2]` —
   * the local stand-in for a cluster's `spark.task.maxFailures=4`):
   * once clean for the baseline answer, once with
-  * `spark.graft.failInject.atCheckpoint=3` killing the first attempt of
-  * a round-2 materialization task mid-iteration (the canonical
+  * `spark.graft.failInject.atCheckpoint` killing the first attempt of
+  * a mid-loop round's materialization task (the canonical
   * preempted-executor shape). A task-end listener counts the induced
   * failure; the probe asserts the injected job still COMPLETES and its
   * rows are IDENTICAL to the baseline — which the driver's DuckDB gate
@@ -41,7 +41,7 @@ object RecoveryProbe {
     def rows(key: String): Seq[String] = {
       val out = SparkEntry.queries(key)(spark, sfDir)
         .collect().map(_.toString).toSeq.sorted
-      Harness.sweepBlocks(spark)
+      Pin.sweep(spark)
       // drain the async listener bus before reading the failure counter —
       // task-end events may still be in flight after collect() returns
       org.apache.spark.sql.graft.bridge
@@ -49,17 +49,17 @@ object RecoveryProbe {
       out
     }
 
-    // per probe: which Iterate.checkpoint call to kill. pagerank's
-    // integer fixed point converges after ONE round on the region graph
-    // (complete subgraph per region -> uniform ranks), so call 2 — the
-    // round-1 rank materialization — is its only in-loop call; BFS runs
-    // its frontier loop to convergence (~4 rounds), so call 3 lands
-    // mid-loop with round-1 state already durable on disk.
-    val probes = Seq(("graph_pagerank", 2), ("graph_bfs_levels", 3))
+    // per probe: which pin to kill. Both keys pin their edges (pin 1),
+    // then the loop's seed (pin 2). pagerank's integer fixed point
+    // converges after ONE round on the region graph (uniform ranks per
+    // complete region subgraph), so pin 3 — the round-1 ranks — is its
+    // only in-loop pin; BFS runs ~4 rounds, so pin 4 lands mid-loop
+    // with round-1 state already durable on disk.
+    val probes = Seq(("graph_pagerank", 3), ("graph_bfs_levels", 4))
     val results = probes.map { case (key, at) =>
       val baseline = rows(key)
       val failsBefore = failedTasks.get()
-      Iterate.resetFaultInjection()
+      Pin.resetFaultInjection()
       spark.conf.set("spark.graft.failInject.atCheckpoint", at.toString)
       val recovered =
         try rows(key)
@@ -81,7 +81,7 @@ object RecoveryProbe {
     val json =
       s"""{"artifact":"RECOVERY","sf_dir":"$sfDir",""" +
         s""""master":"local[8,2]","checkpoint_mode":"reliable",""" +
-        s""""injected":"spark.graft.failInject.atCheckpoint=N kills the first attempt of partition 0 inside the Nth round-materialization job",""" +
+        s""""injected":"spark.graft.failInject.atCheckpoint=N kills the first attempt of partition 0 inside the job that materializes the Nth pin",""" +
         s""""probes":[${results.mkString(",")}],""" +
         s""""why":"reliable checkpoints turn a mid-iteration task loss into one task retry instead of a dead job: the retried task recomputes from the previous round's on-disk checkpoint, never from the loop's full lineage; baseline rows are independently DuckDB-oracle-gated every round (CORRECTNESS -> graph_pagerank / graph_bfs_levels)"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("RECOVERY.json"),

@@ -69,7 +69,7 @@ object Workspace {
   }
 
   /** Recursively delete a dir. */
-  private def rm(dir: String): Unit = {
+  private[graft] def rm(dir: String): Unit = {
     val p = Paths.get(dir)
     if (Files.exists(p)) {
       // walk streams hold directory handles until closed

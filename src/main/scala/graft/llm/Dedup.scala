@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,7 +145,7 @@ object Dedup {
   def candidatePairsOf(docs: DataFrame): DataFrame = {
     // the signature build (explode + 8 min-aggs over ~300 shingles/doc)
     // feeds 2 band subtrees; checkpoint it within the stage build
-    val sig = signaturesOf(docs).localCheckpoint(false)
+    val sig = signaturesOf(docs).transform(Pin)
     pairsFromBands(bandsOf(sig))
   }
 
@@ -489,7 +489,7 @@ object Dedup {
     val arr = docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
         array_distinct(TextOps.charShingles(8)).as("arr"))
-      .localCheckpoint(false)
+      .transform(Pin)
     val sh = arr.select(col("doc_id"), explode(col("arr")).as("s"))
     val rare = sh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= 20)
@@ -503,9 +503,9 @@ object Dedup {
     // df∈[2,20]) — never broadcast it; a shuffle_hash join with rare as
     // the build side is scale-safe AND leaves rsh hash-partitioned by
     // s, which the self-join below then reuses without a new exchange.
-    // (Explicit hint, not planner choice: the checkpointed shingle
-    // subtree has unknown stats and the static planner picks the wrong
-    // broadcast side — measured 6× slower in round 1.)
+    // (Explicit hint, not planner choice: the pinned shingle subtree
+    // carries an estimated, not measured, size and the static planner
+    // picks the wrong broadcast side — measured 6× slower in round 1.)
     val rsh = sh.join(rare.hint("shuffle_hash"), Seq("s"))
     val cand = rsh.as("a")
       .join(rsh.as("b"),
@@ -585,11 +585,11 @@ object Dedup {
     * dedup keeps each cluster's min doc_id. */
   /** Cluster labels (doc_id → smallest doc_id in its near-dup component)
     * as a materialized pipeline stage — consumed by the cluster listing
-    * and the keep-list. The loop body uses EAGER checkpoints: a lazy
-    * checkpoint is re-planned per action (AQE), so in an iterative loop
-    * every round would recompute all previous rounds' lineage — measured
-    * 168s vs ~8s at sf0.1. pairs is already a parquet artifact
-    * (re-readable, real stats) — no checkpoint needed for it. */
+    * and the keep-list. Each loop round is pinned with `Pin.now`
+    * before the previous round's copy is freed (graft.Iterate), else
+    * every round would recompute all previous rounds' lineage —
+    * measured 168s vs ~8s at sf0.1. pairs is already a parquet artifact
+    * (re-readable, real stats) — no pin needed for it. */
   def clusterLabels(s: SparkSession, d: String): DataFrame =
     graft.Materialize.once(s, s"cc_labels|$d") {
       ccLabelsOf(candidatePairs(s, d))
@@ -603,7 +603,7 @@ object Dedup {
   private[llm] def ccLabelsOf(pairs: DataFrame): DataFrame = {
       val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
         .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-        .localCheckpoint()
+        .transform(Pin)
       // min-label propagation through the shared convergence iterator
       // (graft.Iterate — the loop every iterative dataflow here rides):
       // the node's previous label rides along in the same aggregate
@@ -635,11 +635,10 @@ object Dedup {
       val labels = fixed.df
       val out = labels
         .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        // pin the result so the edges/labels checkpoint blocks can be
-        // released NOW; Materialize writes it to parquet right after
-        .localCheckpoint()
-      Seq(edges, labels)
-        .foreach(org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint)
+        // pin the result now so the edges/labels copies can be
+        // released; Materialize writes it to parquet right after
+        .transform(Pin.now)
+      Seq(edges, labels).foreach(Pin.free)
       out
     }
 
@@ -781,7 +780,7 @@ object Dedup {
       val treps = th.groupBy("th").agg(min(col("doc_id")).as("tid"))
       val tmap = th.join(treps.hint("shuffle_hash"), Seq("th"))
         .select(col("doc_id"), col("tid"))
-        .localCheckpoint(false) // feeds the one candidate-tagging pass
+        .transform(Pin) // feeds the one candidate-tagging pass
       // tag each doc-level candidate pair with its representative pair
       // ONCE and checkpoint: candt (the distinct-text work list) and the
       // output fan-out both read this frame, instead of re-running the
@@ -795,10 +794,10 @@ object Dedup {
         .join(tmap.select(col("doc_id").as("id2"), col("tid").as("t2"))
           .hint("shuffle_hash"), "id2")
         .select("id1", "id2", "t1", "t2")
-        .localCheckpoint(false) // feeds candt + the output fan-out
+        .transform(Pin) // feeds candt + the output fan-out
       val candt = candTagged
         .select("t1", "t2").distinct()
-        .localCheckpoint(false) // feeds est, sizes semi-filter and inter
+        .transform(Pin) // feeds est, sizes semi-filter and inter
       // the materialized full-corpus signature stage, NOT a from-scratch
       // signaturesOf: the shingle explode + 8 min-aggs is the family's
       // dominant map cost and already ran once per (application, dir)
@@ -831,7 +830,7 @@ object Dedup {
         .join(candTids, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
           array_distinct(TextOps.charShingles(8)).as("ss"))
-        .localCheckpoint(false) // feeds both sides of the pair attach
+        .transform(Pin) // feeds both sides of the pair attach
       val pert = est
         .join(sh.select(col("doc_id").as("t1"), col("ss").as("ss1"))
           .hint("shuffle_hash"), "t1")
@@ -938,12 +937,10 @@ object Dedup {
     "bloom_prune_join",
     (s, d) => {
       val docs = documents(s, d)
-      // EAGER checkpoint: bsh feeds THREE actions (the count, the bloom
-      // build, the final join) — a lazy checkpoint is re-planned per
-      // action under AQE (the dedup_clusters lesson), computing the
-      // shingle explode three times
+      // pin: bsh feeds THREE actions (the count, the bloom build, the
+      // final join) — unpinned, each would compute the shingle explode
       val bsh = TextOps.shingleRows(docs.filter(col("doc_id") < 20), 8)
-        .select("s").distinct().localCheckpoint()
+        .select("s").distinct().transform(Pin)
       // expectedNumItems from a count over the (small) eval side —
       // sanctioned scalar feedback, same as kmeans' seed collect.
       // Keyed by xxhash64(s): putLong/mightContainLong is the pairing
@@ -1010,7 +1007,7 @@ object Dedup {
     (s, d) => {
       val docs = documents(s, d)
       val bsh = TextOps.shingleRows(docs.filter(col("doc_id") < 20), 8)
-        .select("s").distinct().localCheckpoint()
+        .select("s").distinct().transform(Pin)
       val bf = bsh.select(xxhash64(col("s")).as("h"))
         .stat.bloomFilter("h", math.max(bsh.count(), 1L), 0.03)
       val bfBytes = {
@@ -1245,7 +1242,7 @@ object Dedup {
     // shard signatures feed three subtrees (two band joins + the verify
     // join) — checkpoint so the shingle explode + signature aggregate
     // (the delta job's only corpus-scan-free map cost) runs once
-    deltaDedupFromSigs(corpusSig, signaturesOf(shard).localCheckpoint(false),
+    deltaDedupFromSigs(corpusSig, signaturesOf(shard).transform(Pin),
       shard.select("doc_id"))
 
   /** [[deltaDedupOf]] below the signature build — exposed so the spec
@@ -1271,7 +1268,7 @@ object Dedup {
   private[llm] def deltaDedupFromSigs(corpusSig: DataFrame,
       shardSig: DataFrame, shardIds: DataFrame): DataFrame =
     deltaDedupFromGroupedSigs(
-      sigGroupsOf(corpusSig).localCheckpoint(false), shardSig, shardIds)
+      sigGroupsOf(corpusSig).transform(Pin), shardSig, shardIds)
 
   /** Distinct signature VALUES with each group's min member id riding
     * along, in the signaturesOf column order (doc_id first —
@@ -1301,14 +1298,14 @@ object Dedup {
     * only through its stored grouped index. */
   def deltaDedupGrouped(cg: DataFrame, shard: DataFrame): DataFrame =
     deltaDedupFromGroupedSigs(cg,
-      signaturesOf(shard).localCheckpoint(false), shard.select("doc_id"))
+      signaturesOf(shard).transform(Pin), shard.select("doc_id"))
 
   private[llm] def deltaDedupFromGroupedSigs(cg: DataFrame,
       shardSig: DataFrame, shardIds: DataFrame): DataFrame = {
     val hcols = (0 until 8).map(i => s"h$i")
     // shard-side collapse stays in-job (shard-sized); it feeds two
     // subtrees (bands + the verify-tier sig lookup / member map)
-    val sg = sigGroupsOf(shardSig).localCheckpoint(false)
+    val sg = sigGroupsOf(shardSig).transform(Pin)
     val sb = bandsOf(sg)
     // group-level candidates: (partner group min, shard group rep)
     val vsCorpus = bandsOf(cg).as("c")
@@ -1423,7 +1420,7 @@ object Dedup {
     // shard signatures feed both probe joins — checkpoint so the token
     // explode + 32-bit-vote aggregate runs once, not per branch
     deltaSimhashFromSigs(corpusSig,
-      simhashSignatures(shard).localCheckpoint(false),
+      simhashSignatures(shard).transform(Pin),
       shard.select("doc_id"))
 
   private[llm] def deltaSimhashFromSigs(corpusSig: DataFrame,
@@ -1529,11 +1526,11 @@ object Dedup {
         s"""cast(conv(substring(md5(concat('mbc-v1:',
            cast(doc_id as string))), 1, 8), 16, 10) as bigint) % ${div}L = 0"""))
         .select("doc_id", "text")
-        .localCheckpoint(false) // feeds the shingle index + the LSH pipeline
+        .transform(Pin) // feeds the shingle index + the LSH pipeline
       // distinct shingle sets: Jaccard is over SETS, while the minhash
       // signature consumes positional rows (min() is dup-insensitive)
       val sset = TextOps.shingleRows(smp, 8).distinct()
-        .localCheckpoint(false) // feeds sizes + both self-join sides
+        .transform(Pin) // feeds sizes + both self-join sides
       val sz = sset.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       val inter = sset.as("a")
         .join(sset.as("b"),

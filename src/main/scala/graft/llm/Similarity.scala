@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -228,14 +228,14 @@ object Similarity {
         col("embedding").as("e2"))
       val w = Window.partitionBy("id1").orderBy(col("dot").desc, col("id2"))
       // shuffle_hash at the source: the bucket join plans BELOW the
-      // localCheckpoint pin, where PlanSpec cannot see it — the
+      // Pin, where PlanSpec cannot see it — the
       // never-statically-broadcast rule must be carried by the hint
       val topk = a.join(b.hint("shuffle_hash"), Seq("bucket"))
         .filter(col("id1") =!= col("id2"))
         .select(col("id1"), col("id2"), quantDot("e1", "e2").as("dot"))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 3)
-        .localCheckpoint(false) // both sides of the mutual join
+        .transform(Pin) // both sides of the mutual join
       topk.filter(col("id1") < col("id2"))
         .join(topk.select(col("id1").as("id2"), col("id2").as("id1"),
           col("rank").as("rank_rev")).hint("shuffle_hash"),
@@ -400,7 +400,7 @@ object Similarity {
       val cells = scored.groupBy("vec_id")
         .agg(max_by(col("label"), struct(col("score"), -col("label")))
           .as("cell"))
-        .localCheckpoint(false)
+        .transform(Pin)
       val members = e.join(cells, "vec_id")
       val q = members.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cell"))
@@ -486,13 +486,13 @@ object Similarity {
     "kmeans_lloyd",
     (s, d) => {
       // the component table feeds every stage (6 scans in the naive
-      // plan); a LAZY local checkpoint collapses them to one compute —
-      // safe here because the query is a single action (the lazy-
-      // checkpoint-under-AQE re-plan trap only bites iterative actions).
-      // Downstream joins against it carry explicit broadcast hints, so
-      // the checkpoint's unknown stats can't flip a build side.
+      // plan); a pin collapses them to one compute — the pin runs its
+      // upstream shuffle stages once, at the call, and the first action
+      // fills the blocks the later stages read. Downstream joins
+      // against it carry explicit broadcast hints, so the pin's
+      // estimated (not measured) stats can't flip a build side.
       val comp = quantComponents(embeddings(s, d)).select("vec_id", "dim", "q")
-        .localCheckpoint(false)
+        .transform(Pin)
       val seedIds: Array[Long] = seedIdsOf(comp, 8)
       if (seedIds.isEmpty)
         // corpus with no non-empty vectors: nothing to cluster
@@ -513,7 +513,7 @@ object Similarity {
       // a2 feeds both output branches (sizes + centroid recompute):
       // checkpoint so the whole two-iteration pipeline runs once, not
       // twice under the final join
-      val a2 = assign(update(assign(cent0))).localCheckpoint(false)
+      val a2 = assign(update(assign(cent0))).transform(Pin)
       val cent2 = update(a2)
       a2.groupBy("cluster").agg(count(lit(1)).as("n_members"))
         .join(cent2.groupBy("cluster")
@@ -611,7 +611,7 @@ object Similarity {
   private[graft] def pqTopkOf(e: DataFrame): DataFrame = {
     val sess = e.sparkSession
     val comp = quantComponents(e).select("vec_id", "dim", "q")
-      .localCheckpoint(false)
+      .transform(Pin)
     val seedIds: Array[Long] = seedIdsOf(comp, 16)
     val ks = seedIds.indices
     if (seedIds.isEmpty)
@@ -631,7 +631,7 @@ object Similarity {
           .agg(sum((col("c0") - col("q")) * (col("c0") - col("q"))).as("s0"),
             ks.drop(1).map(k =>
               sum((col(s"c$k") - col("q")) * (col(s"c$k") - col("q"))).as(s"s$k")): _*)
-          .localCheckpoint(false)
+          .transform(Pin)
         val best = bestScoreOf(ks)
         // first-match on ascending slot order = smallest code wins ties,
         // matching the oracle's ORDER BY (d2, slot)
@@ -724,7 +724,7 @@ object Similarity {
   private[graft] def pqIndexFramesOf(e: DataFrame): (DataFrame, DataFrame) = {
     val s = e.sparkSession
     val comp = quantComponents(e).select("vec_id", "dim", "q")
-      .localCheckpoint(false)
+      .transform(Pin)
     val seedIds: Array[Long] = seedIdsOf(comp, 16)
     if (seedIds.isEmpty)
       (s.range(0).select(col("id").as("dim"), col("id").as("c0")),
@@ -951,7 +951,7 @@ object Similarity {
       val m = e.join(semdedupCellsOf(e), Seq("vec_id"))
         .withColumn("bucket",
           expr(bucketExpr.replace("EMB", "embedding")).cast("long"))
-        .localCheckpoint(false) // 3 consumers: both pair sides + output
+        .transform(Pin) // 3 consumers: both pair sides + output
       val a = m.select(col("cell").as("pc"), col("bucket").as("pb"),
         col("vec_id").as("id1"), col("embedding").as("e1"), col("d2c").as("d1"))
       val b = m.select(col("cell").as("pc"), col("bucket").as("pb"),
@@ -1074,7 +1074,7 @@ object Similarity {
     e.filter(col("vec_id") < 10 || expr(
       s"""cast(conv(substring(md5(concat('cal-v1:',
          cast(vec_id as string))), 1, 8), 16, 10) as bigint) % ${div}L = 0"""))
-      .localCheckpoint(false)
+      .transform(Pin)
   }
 
   /** Exact quantDot top-3 ground truth over the calibration corpus —
@@ -1093,7 +1093,7 @@ object Similarity {
       .select(col("qid"), col("vec_id"), quantDot("qe", "embedding").as("dot"))
       .withColumn("rank", row_number().over(wEx).cast("long"))
       .filter(col("rank") <= 3).select("qid", "vec_id")
-      .localCheckpoint(false)
+      .transform(Pin)
   }
 
   /** Per-query hit counts of an approximate tier against the exact
@@ -1331,7 +1331,7 @@ object Similarity {
       val exact = exactTop3Of(es)
       val truth = exact.groupBy("qid").agg(count(lit(1)).as("truth_n"))
       val codes = int8CodesOf(es).select("vec_id", "amax", "q")
-        .localCheckpoint(false) // feeds the query side and the corpus side
+        .transform(Pin) // feeds the query side and the corpus side
       val qcodes = codes.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("amax").as("qamax"),
           col("q").as("qq"))

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -273,7 +273,7 @@ private[llm] trait TextFingerprint { self: TextOps.type =>
     val rare = fp.join(df.filter(col("df").between(2, 10))
         .hint("shuffle_hash"), "fp_hash")
       .select("doc_id", "fp_hash")
-      .localCheckpoint(false)
+      .transform(Pin)
     rare.select(col("doc_id").as("id1"), col("fp_hash"))
       .join(rare.select(col("doc_id").as("id2"), col("fp_hash"))
         .hint("shuffle_hash"), "fp_hash")

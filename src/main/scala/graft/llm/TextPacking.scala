@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -341,18 +341,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * source) and curriculum_schedule (global, band-major) — the
     * global_shuffle rank shape, generalized. */
   private[llm] def bucketRankOf(df: DataFrame, resetCols: Seq[String],
-      orderCols: Seq[String], idCol: String,
-      eagerPin: Boolean = false): DataFrame = {
+      orderCols: Seq[String], idCol: String): DataFrame = {
     // pin: the keyed frame feeds TWO plan branches (cell counts + the
     // offset join-back) and Catalyst cannot CSE across them — without
     // the pin every caller re-runs its whole upstream (a corpus scan,
     // or curriculum's entire banding subplan) once per branch.
-    // eagerPin materializes it AT CALL TIME — only useful when the
-    // caller runs an independent leg concurrently (mixtureSelectOf
-    // forks the apportionment build; guide §2.6); single-action callers
-    // keep the lazy default, which pipelines the pin into their action.
     val keyed = df.withColumn("bkt", substring(col("k"), 1, 2))
-      .localCheckpoint(eagerPin)
+      .transform(Pin)
     val cellCols = resetCols ++ orderCols :+ "bkt"
     val cells = keyed.groupBy(cellCols.map(col): _*)
       .agg(count(lit(1)).as("n"))
@@ -444,18 +439,18 @@ private[llm] trait TextPacking { self: TextOps.type =>
   private[llm] def mixtureAllocFromCounts(srcCounts: DataFrame,
       budgetDiv: Int): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    // eager localCheckpoint: the totals, the quota sum, and the final
-    // frame all derive from this config-bounded per-source table, and
-    // Catalyst cannot CSE across the cross-joins — without the pin the
-    // plan re-scans the whole corpus once per branch (3 scans at
-    // 100 TB for one map-side count)
+    // pin: the totals, the quota sum, and the final frame all derive
+    // from this config-bounded per-source table, and Catalyst cannot
+    // CSE across the cross-joins — without the pin the plan re-scans
+    // the whole corpus once per branch (3 scans at 100 TB for one
+    // map-side count)
     val src = srcCounts
       .withColumn("weight_milli",
         lit(500L) +
           expr("cast(conv(substring(md5(concat('w-v1:', source)), 1, 8), 16, 10) as bigint) % 3")
             * 250L)
       .withColumn("cw", dec(col("corpus_docs") * col("weight_milli")))
-      .localCheckpoint()
+      .transform(Pin)
     val tot = src.agg(dec(sum(col("cw"))).as("tot_cw"),
       expr(s"sum(corpus_docs) div $budgetDiv").as("budget"))
     val q = src.crossJoin(broadcast(tot))
@@ -563,17 +558,16 @@ private[llm] trait TextPacking { self: TextOps.type =>
     "repeat_upsample",
     (s, d) => {
       // OVERLAPPED legs (guide §2.6, r20 — the mixtureSelectOf shape):
-      // the apportionment build (its eager config-bounded checkpoint
-      // inside mixtureAllocFromCounts) and the md5-bucket rank pin share
-      // no data dependency until the copies join — fork the alloc leg
-      // and materialize the rank pin eagerly on this thread so the two
-      // jobs back-fill each other instead of running in series
+      // the apportionment build (its config-bounded pin inside
+      // mixtureAllocFromCounts) and the md5-bucket rank share no data
+      // dependency until the copies join — fork the alloc leg so its
+      // jobs run while this thread builds the rank; the rank pin fills
+      // in the final action
       val allocLeg = graft.Par.fork(mixtureAllocFrameOf(s, d, 1)
         .select(col("source"), col("corpus_docs"), col("uncapped")))
       val db = documents(s, d).select(col("doc_id"), col("source"),
         md5(concat(lit("up-v1:"), col("doc_id").cast("string"))).as("k"))
-      val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id",
-        eagerPin = true)
+      val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id")
       val alloc = allocLeg()
       rnk.join(alloc.hint("shuffle_hash"), Seq("source"))
         .withColumn("copies",
@@ -681,7 +675,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
         concat(lit(",,"), regexp_replace(col("w"), "(.)", "$1,,")).as("enc"))
-      .localCheckpoint(false)
+      .transform(Pin)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long)]
     var done = false
@@ -703,20 +697,17 @@ private[llm] trait TextPacking { self: TextOps.type =>
         val (l, r, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         out += ((rnd.toLong, l, r, l + r, cnt))
-        // EAGER checkpoint, then drop the superseded round's blocks:
-        // each round's table replaces the previous one, and a lazy
-        // chain would pin k vocab-sized block sets in executor memory
-        // — linear growth that caps training depth (measured by the
+        // pin now, then free the superseded round's copy: each round's
+        // table replaces the previous one, and keeping them all would
+        // pin k vocab-sized block sets in executor memory — linear
+        // growth that caps training depth (measured by the
         // 3/30/300-round depth curve, BPE_DEPTH.json)
         val prev = words
         words = prev
           .select(col("freq"),
             expr(s"replace(enc, ',$l,,$r,', ',$l$r,')").as("enc"))
-          .localCheckpoint(true)
-        // Dataset.unpersist() is a no-op here: localCheckpoint blocks are
-        // not CacheManager-registered (bridge.scala), so freeing the
-        // superseded round deterministically needs the block-level drop.
-        org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(prev)
+          .transform(Pin.now)
+        Pin.free(prev)
       }
     }
     out.toSeq.toDF("round", "left_sym", "right_sym", "merged_sym", "pair_cnt")
@@ -955,7 +946,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * two-level prefix-sum packing machinery ([[packCountsOf]]) fed by
     * [[bpeEncodeOf]] counts instead of whitespace counts, so the
     * training-prep story runs tokenizer-true end to end. The encode
-    * projection is eagerly pinned: packCountsOf reads its input in 3
+    * projection is pinned: packCountsOf reads its input in 3
     * actions (span feedback, chunk totals, offset join-back), and the
     * per-word merge surgery should run once, not three times (the
     * pipeline_quality_pack survivor rule). */
@@ -965,7 +956,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
       packCountsOf(
         bpeEncodeOf(documents(s, d), trainedMerges(s, d))
           .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"))
-          .localCheckpoint()),
+          .transform(Pin)),
     Some(s"""WITH $bpeTrainCtesSql,
           $bpeEncodeCtesSql,
           toks AS (
@@ -1029,14 +1020,12 @@ private[llm] trait TextPacking { self: TextOps.type =>
         .join(keepBand.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
         .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
         .join(train.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        // EAGER checkpoint of the survivor projection: the packer reads
-        // its input twice (chunk totals + offset join-back) — without
-        // materialization the whole gate chain (band histogram, clean
-        // gates, split hash) would re-execute per use, and a LAZY
-        // checkpoint re-plans per action under AQE (the dedup_clusters
-        // lesson). This is block reuse of the survivor rows, not a
-        // per-stage corpus copy
-        .localCheckpoint()
+        // pin the survivor projection: the packer reads its input twice
+        // (chunk totals + offset join-back) — without the pin the whole
+        // gate chain (band histogram, clean gates, split hash) would
+        // re-execute per use. This is block reuse of the survivor rows,
+        // not a per-stage corpus copy
+        .transform(Pin)
       packCountsWithSpan(survivors, packSpanFor(spanLeg()))
     },
     Some {
@@ -1170,7 +1159,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
       // Catalyst cannot CSE across them (the bucketRankOf rationale)
       val toks = documents(s, d).where(col("text").isNotNull)
         .select(col("doc_id"), size(tokens).cast("long").as("n_tokens"))
-        .localCheckpoint(false)
+        .transform(Pin)
       def totalsOf(batches: DataFrame, name: String): DataFrame =
         batches.agg(count(lit(1)).as("units"),
             coalesce(sum(col("sl")), lit(0L)).as("real_tokens"),
@@ -1412,18 +1401,17 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * window partition. Returns the selected doc_id set. */
   def mixtureSelectOf(surv: DataFrame): DataFrame = {
     // OVERLAPPED legs (guide §2.6 — VERDICT r19 next-round 5): the
-    // apportionment (per-source counts → quotas, one eager
-    // config-bounded checkpoint inside mixtureAllocOf) and the rank pin
-    // (md5-bucket projection of the survivor corpus) share NO data
-    // dependency until the final quota join — fork the alloc build and
-    // materialize the rank pin eagerly on this thread, so the two jobs
-    // back-fill each other's stragglers instead of running in series.
+    // apportionment (per-source counts → quotas, one config-bounded
+    // pin inside mixtureAllocOf) and the rank pin (md5-bucket
+    // projection of the survivor corpus) share NO data dependency until
+    // the final quota join — fork the alloc build so its jobs run while
+    // this thread builds the rank; the rank pin fills in the final
+    // action.
     val allocLeg = graft.Par.fork(
       mixtureAllocOf(surv, 2).select(col("source"), col("alloc_docs")))
     val db = surv.select(col("doc_id"), col("source"),
       md5(concat(lit("mix-v1:"), col("doc_id").cast("string"))).as("k"))
-    val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id",
-      eagerPin = true)
+    val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id")
     val alloc = allocLeg()
     rnk.join(alloc.hint("shuffle_hash"), Seq("source"))
       .filter(col("rnk") < col("alloc_docs"))
@@ -1469,13 +1457,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
       val surv = cleanKeepSurvivorsWith(s, d,
           manifestRowsOf(documents(s, d),
             Seq(col("source"), size(tokens).cast("long").as("n_tokens"))))
-        .localCheckpoint()
+        .transform(Pin)
       val sel = mixtureSelectOf(surv)
       // selected pin: the packer reads its input twice and the
       // manifest projection reads it once more
       val selected = surv
         .join(sel.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .localCheckpoint()
+        .transform(Pin)
       val packed = packCountsWithSpan(
         selected.select("doc_id", "n_tokens"), packSpanFor(spanLeg()))
       selected.select("shard", "doc_id", "ws", "chars", "h")
@@ -1583,11 +1571,11 @@ private[llm] trait TextPacking { self: TextOps.type =>
           Seq(col("source"), size(tokens).cast("long").as("n_tokens")))
         .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
         .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+        .transform(Pin)
       val selected = surv
         .join(mixtureSelectOf(surv).hint("shuffle_hash"),
           Seq("doc_id"), "left_semi")
-        .localCheckpoint()
+        .transform(Pin)
       val packed = packCountsWithSpan(
         selected.select("doc_id", "n_tokens"), packSpanFor(spanLeg()))
       val survIdx = surv.select("doc_id", "source")
@@ -1647,7 +1635,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
         Seq(col("source"), size(tokens).cast("long").as("n_tokens")))
       .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Pin)
   }
 
   /** The delta chain below the manifest: shard survivors → frozen-quota
@@ -1706,7 +1694,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
       .select("doc_id")
     val admitted = survS
       .join(adm.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+      .transform(Pin)
     // append at the next EMPTY bin: base = ceil(Σ selected corpus
     // tokens / 2048), one stored-index aggregate (the A10 pattern) —
     // computed on the forked leg above, joined here
@@ -1723,7 +1711,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
     "delta_corpus_to_shards",
     (s, d) => {
       val (_, manC) = ctsCorpusState(s, d)
-      val adm = deltaAdmittedOf(s, d).localCheckpoint(false)
+      val adm = deltaAdmittedOf(s, d).transform(Pin)
       val manS = manifestAggOf(
         adm.select("shard", "doc_id", "ws", "chars", "h"),
         adm.select("doc_id", "bin_id"))

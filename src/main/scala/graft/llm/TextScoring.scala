@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -641,7 +641,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
       val dl = documents(s, d)
         .select(col("doc_id"), size(tokens).cast("long").as("dl"))
         .filter(col("dl") > 0)
-        .localCheckpoint(false) // 2 consumers: totals, score join
+        .transform(Pin) // 2 consumers: totals, score join
       val st = dl.agg(sum(col("dl")).as("a"), count(lit(1)).as("nd"))
       val tf = documents(s, d)
         .select(col("doc_id"), explode(tokens).as("t"))
@@ -716,7 +716,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
       val tf = documents(s, d)
         .select(col("doc_id"), explode(tokens).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(false)
+        .transform(Pin)
       val w = Window.partitionBy("doc_id")
         .orderBy(col("score_micro").desc, col("t"))
       // df via the compressed aggregate + join-back, NOT a count window
@@ -854,7 +854,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
       // estimates, never a static hint — corpus-derived rule). The
       // explode runs twice (counts leg + probe leg) ON PURPOSE: it is
       // two column-pruned scans of codegen'd map work, measured CHEAPER
-      // (1.3 vs 1.9 s at sf0.1) than localCheckpointing the exploded
+      // (1.3 vs 1.9 s at sf0.1) than pinning the exploded
       // corpus-sized occurrence stream to blocks just to share one
       // pass — the materialization write is the expensive half. The
       // isNotNull filter reproduces the inner join's NULL-key drop
@@ -1105,7 +1105,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
              END"""))).as("g"))
       .select(col("doc_id"), col("lang"),
         substring(md5(col("g")), 1, 2).as("b"))
-      .localCheckpoint(false) // 2 consumers: profile + weight join
+      .transform(Pin) // 2 consumers: profile + weight join
     val prof = grams.groupBy("b")
       .agg(count(lit(1)).as("r"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t"))
@@ -1121,7 +1121,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
     "dsir_weights",
     (s, d) => {
       val wfull = dsirWeightOf(documents(s, d))
-        .localCheckpoint(false) // 2 consumers: totals + final projection
+        .transform(Pin) // 2 consumers: totals + final projection
       val tot = wfull.agg(sum(col("weight_micro")).as("tot_w"),
         count(lit(1)).as("nw"))
       wfull.crossJoin(broadcast(tot))

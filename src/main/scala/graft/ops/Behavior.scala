@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import graft.Tables._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -128,7 +128,7 @@ object Behavior {
         lineitem(s, d)
           .filter(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
           .select(col("l_orderkey"), col("l_partkey")))
-        .localCheckpoint(false) // 3 consumers: pairs, support, total
+        .transform(Pin) // 3 consumers: pairs, support, total
       val support = baskets.select(explode(col("ps")).as("l_partkey"))
         .groupBy("l_partkey").agg(count(lit(1)).as("n"))
       val tot = baskets.agg(count(lit(1)).as("t"))
@@ -283,7 +283,7 @@ object Behavior {
         .agg(max(col("o_orderdate")).as("last_order"),
           count(lit(1)).as("f_orders"),
           coalesce(sum(col("cents")), lit(0L)).as("m_cents"))
-        .localCheckpoint(false)
+        .transform(Pin)
       val anchor = rfm0.agg(max(col("last_order")).as("a"))
       val base = rfm0.crossJoin(broadcast(anchor))
         .withColumn("r_days",
@@ -305,7 +305,7 @@ object Behavior {
       // the offset/band frames are corpus-derived → shuffle_hash.
       val um = base.select(col("o_custkey"), expr(
           "stack(3, 'r', r_days, 'f', f_orders, 'm', m_cents) as (mname, v)"))
-        .localCheckpoint(false) // 3 consumers: bounds, offsets, rank join
+        .transform(Pin) // 3 consumers: bounds, offsets, rank join
       val bounds = um.groupBy("mname").agg(
         min(col("v")).as("gr_mn"), max(col("v")).as("gr_mx"),
         count(lit(1)).as("gr_n"))
@@ -407,7 +407,7 @@ object Behavior {
         .select(col("event_type"), to_date(col("ts")).as("day"),
           floor(col("value") * 1000).cast(LongType).as("milli"))
         .groupBy("event_type", "day").agg(sum(col("milli")).as("daily_milli"))
-        .localCheckpoint(false) // 2 consumers: per-type totals, the series
+        .transform(Pin) // 2 consumers: per-type totals, the series
       val totals = daily.groupBy("event_type")
         .agg(sum(col("daily_milli")).as("tot"), count(lit(1)).as("nd"))
       val wCum = Window.partitionBy("event_type").orderBy("day")

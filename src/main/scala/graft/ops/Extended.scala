@@ -310,7 +310,7 @@ object Extended {
         orders(s, d)
           .select(cents(col("o_totalprice")).as("cents"),
             col("o_orderkey")),
-        "cents", "o_orderkey", 10, "decile", pin = false)
+        "cents", "o_orderkey", 10, "decile")
         .groupBy("decile")
         .agg(count(lit(1)).as("order_cnt"),
           min(col("cents")).as("min_cents"),

@@ -40,24 +40,20 @@ private[graft] object GlobalRank {
     * and non-null so the order — and therefore every bucket boundary —
     * is total and deterministic.
     *
-    * `pin` (default true) lazily checkpoints the bucketed frame, which
-    * feeds THREE plan branches (bounds, bucket counts, the offset
-    * join-back) Catalyst cannot CSE across — the bucketRankOf
-    * rationale. Pass pin=false when `df` is itself a bare pruned scan
-    * or an already-checkpointed frame: re-reading the source is then
-    * cheaper than materializing a block copy of it. */
+    * The bucketed frame feeds THREE plan branches (bounds, bucket
+    * counts, the offset join-back) and is not pinned: `df` must be a
+    * bare pruned scan or an already-pinned frame, whose re-read is
+    * cheaper than a block copy of it. */
   def ntileBanded(df: DataFrame, metric: String, tiebreak: String,
-      k: Int, out: String, nBuckets: Int = 1024,
-      pin: Boolean = true): DataFrame = {
+      k: Int, out: String, nBuckets: Int = 1024): DataFrame = {
     val bounds = df.agg(
       min(col(metric)).as("gr_mn"), max(col(metric)).as("gr_mx"),
       count(lit(1)).as("gr_n"))
-    val sb0 = df.crossJoin(broadcast(bounds))
+    val sb = df.crossJoin(broadcast(bounds))
       .withColumn("gr_bkt",
         when(col(metric).isNull, lit(-1L))
           .otherwise(expr(
             s"(($metric - gr_mn) * $nBuckets) div (gr_mx - gr_mn + 1)")))
-    val sb = if (pin) sb0.localCheckpoint(false) else sb0
     val offs = sb.groupBy("gr_bkt").agg(count(lit(1)).as("gr_c"))
       .withColumn("gr_off",
         coalesce(sum(col("gr_c")).over(Window.orderBy("gr_bkt")

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ object Graph {
       val edges = n.join(n.select(col("id").as("dst"), col("r")), Seq("r"))
         .filter(col("id") =!= col("dst"))
         .select(col("id").as("src"), col("dst"))
-        .localCheckpoint(false)
+        .transform(Pin)
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       // the rank table is node-count-sized (corpus-derived) — NEVER
       // broadcast it: shuffle_hash keeps each round a bounded hash join
@@ -206,7 +206,7 @@ object Graph {
         when(col("d1") < col("d2") ||
           (col("d1") === col("d2") && col("s1") < col("s2")),
           col("s2")).otherwise(col("s1")).as("v"))
-      .localCheckpoint(false)
+      .transform(Pin)
   }
 
   /** Per-node triangle counts over any undirected (s1, s2) edge frame —
@@ -328,8 +328,8 @@ object Graph {
     * root and depth by POINTER DOUBLING — 4 rounds of self-join double
     * the known-ancestor distance 1→2→4→8→16, so a depth-D hierarchy
     * resolves in O(log D) bounded-size joins instead of D dependent
-    * scans (the iterative-dataflow answer to recursive CTEs; eager
-    * per-round checkpoints exactly as dedup_clusters, else the
+    * scans (the iterative-dataflow answer to recursive CTEs; per-round
+    * pins through graft.Iterate exactly as dedup_clusters, else the
     * self-referencing plan tree doubles per round) — plus the classic
     * BOM/org-chart subtree rollup (spend + node count over all
     * descendants, self included) from the exploded ancestor chain.
@@ -348,7 +348,7 @@ object Graph {
         .groupBy(col("c_custkey").as("k"))
         .agg(coalesce(sum(cents(col("o_totalprice"))), lit(0L))
           .as("spend_cents"))
-        .localCheckpoint()
+        .transform(Pin)
       // ancestor chain from the key encoding: k div 10^j is on the chain
       // while the previous hop was still an internal node (≥ 10).
       // j runs to 18 — the full BIGINT key domain (10^18 is exact in
@@ -453,7 +453,7 @@ object Graph {
       .join(nodes0.select(col("k").as("pk")).hint("shuffle_hash"),
         col("parent") === col("pk"), "left")
       .select(col("k"), col("pk").as("parent"), col("spend_cents"))
-      .localCheckpoint()
+      .transform(Pin)
     // closure by pointer doubling through the shared convergence
     // iterator: union+distinct only ever ADDS (k, anc, d) rows, so the
     // monotone row-count metric is an exact fixed-point witness — the
@@ -477,7 +477,7 @@ object Graph {
       .join(nodes.filter(col("parent").isNull)
         .select(col("k").as("anc")).hint("shuffle_hash"), Seq("anc"))
       .select(col("k"), col("anc").as("root"), col("d").as("depth"))
-      .localCheckpoint()
+      .transform(Pin)
     // completeness guard: an under-provisioned round count must FAIL, not
     // silently drop deep nodes from the output and undercount their
     // ancestors' subtrees — every node must have reached a root. A
@@ -641,14 +641,13 @@ object Graph {
     "graph_bfs_levels",
     (s, d) => {
       val e0 = copurchaseEdges(s, d)
-      // EAGER checkpoint: the 8 frontier rounds each run an action over
-      // this loop-invariant table, and a lazy checkpoint is re-planned
-      // per action under AQE (the measured clusterLabels lesson) — the
-      // symmetrize-union would be rebuilt every round
+      // pin: the 8 frontier rounds each run an action over this
+      // loop-invariant table — the symmetrize-union would otherwise be
+      // rebuilt every round
       val edges = e0
         .union(e0.select(col("s2").as("s1"), col("s1").as("s2")))
         .select(col("s1").as("src"), col("s2").as("dst"))
-        .localCheckpoint()
+        .transform(Pin)
       val minNation = supplier(s, d).agg(min(col("s_nationkey")).as("mn"))
       val sources = supplier(s, d)
         .join(broadcast(minNation), col("s_nationkey") === col("mn"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -264,7 +264,7 @@ object Parity {
         .join(customer(s, d), col("o_custkey") === col("c_custkey"))
         .join(broadcast(nation(s, d)), col("c_nationkey") === col("n_nationkey"))
         .select("o_orderkey", "o_totalprice", "n_name")
-        .localCheckpoint(false)
+        .transform(Pin)
       val top5 = ordCustNation
         .groupBy("n_name")
         .agg(sum(money(col("o_totalprice"))).as("rev"))

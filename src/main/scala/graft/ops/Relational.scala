@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables._
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -320,8 +320,8 @@ object Relational {
       val dirtyNames = dirty.select("dname").distinct()
       // checkpoint the variant tables: the block gate and the candidate
       // join both consume them — one explode, two readers
-      val dv = variants(dirtyNames, "dname").localCheckpoint()
-      val cv = variants(cleanNames, "name").localCheckpoint()
+      val dv = variants(dirtyNames, "dname").transform(Pin)
+      val cv = variants(cleanNames, "name").transform(Pin)
       // guard half 2: loud cap on the worst per-variant candidate block
       val maxPairs =
         s.conf.get("spark.graft.fuzzyLink.maxBlockPairs", "1000000").toLong

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.QuerySpec
+import graft.{Pin, QuerySpec}
 import graft.Tables._
 import org.apache.spark.sql.functions._
 
@@ -159,12 +159,12 @@ object Sketches {
     "hll_intersect_est",
     (s, d) => {
       val ut = events(s, d).select(col("event_type"), col("user_id"))
-      // eager pin: both sides of the pair join derive from this
+      // pin: both sides of the pair join derive from this
       // config-sized frame (|types| rows × 4 KB) — without it each side
       // re-scans the corpus to rebuild the same sketches
       val sk = ut.groupBy("event_type")
         .agg(hll_sketch_agg(col("user_id"), lit(12)).as("sk"))
-        .localCheckpoint()
+        .transform(Pin)
       val a = sk.select(col("event_type").as("t1"), col("sk").as("sk1"))
       val b = sk.select(col("event_type").as("t2"), col("sk").as("sk2"))
       val est = a.join(b, col("t1") < col("t2"))
@@ -270,7 +270,7 @@ object Sketches {
       // explicit scope keeps both engines on one definition
       val items = events(s, d).filter(col("value").isNotNull)
         .select(floor(col("value")).cast("long").as("item"))
-        .localCheckpoint(false) // 3 consumers: partials, exact, total
+        .transform(Pin) // 3 consumers: partials, exact, total
       val partials = items.as[Long]
         .mapPartitions(it => spaceSavingSummary(it, k)).toDF("item", "est")
       val merged = partials.groupBy("item").agg(sum(col("est")).as("est"))

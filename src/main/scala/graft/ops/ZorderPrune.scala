@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ object ZorderPrune {
     // the demo's subject is the non-null curve; zorder_layout itself
     // audits the dedicated null file's routing
     val rows = Etl.zorderRows(s, d).filter(col("file_id").isNotNull)
-      .localCheckpoint()
+      .transform(Pin)
     val zFiles = writeLayout(rows, s"$base/zorder")
     // the unclustered control: content-hash file assignment — the
     // clustering a heap of arrival-order ingest files has (none)

@@ -25,24 +25,12 @@ object bridge {
     c
   }
 
-  /** Free the BlockManager blocks behind a `localCheckpoint()`ed frame
-    * (they are NOT CacheManager-registered, so `df.unpersist()` can't
-    * reach them). Safe only once the frame's data is no longer needed —
-    * a truncated-lineage RDD cannot be recomputed. */
-  def unpersistLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-
-  /** Free EVERYTHING behind a frame checkpointed by `graft.Iterate`:
-    * the BlockManager blocks of a localCheckpoint AND the on-disk files
-    * of a reliable `checkpoint()` (`ReliableRDDCheckpointData
+  /** Free EVERYTHING behind a frame pinned by `graft.Pin`: the
+    * BlockManager blocks of a localCheckpoint AND the on-disk files of a
+    * reliable `checkpoint()` (`ReliableRDDCheckpointData
     * .cleanCheckpoint` is private[spark]; this bridge package sits
-    * under org.apache.spark, so the loop can bound its disk footprint
-    * to two rounds' state instead of the loop's whole history). Both
+    * under org.apache.spark, so a loop can bound its disk footprint to
+    * two rounds' state instead of the loop's whole history). Both
     * halves are no-ops for the mode not in use. */
   def freeCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]

@@ -68,40 +68,6 @@ class IterateSpec extends SparkSpec {
     assert(fixed.df.agg(max(col("v"))).as[Long].head() == 0L)
   }
 
-  test("spark.graft.checkpointDir switches rounds to RELIABLE checkpoints, freeing all but the last") {
-    // the cluster-durability contract: with the conf set, every round
-    // materializes through an eager reliable checkpoint (survives
-    // executor loss — localCheckpoint blocks do not), and each round's
-    // files are deleted once the next round lands, so exactly the final
-    // round's rdd-* directory remains on disk when the loop returns
-    val dir = tempDir("ckpt")
-    spark.conf.set("spark.graft.checkpointDir", dir)
-    try {
-      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-      val init = Seq(1L).toDF("node").select(col("node"), lit(0L).as("d"))
-      val fixed = Iterate.growth(init, 8)(ops.Graph.bfsStep(edges))
-      assert(fixed.converged && fixed.rounds == 4)
-      assert(fixed.df.as[(Long, Long)].collect().sorted.toSeq ==
-        Seq((1L, 0L), (2L, 1L), (3L, 2L), (4L, 3L)))
-      // the returned frame IS a reliable checkpoint rooted under dir
-      val files = org.apache.spark.sql.graft.bridge.checkpointFiles(fixed.df)
-      assert(files.nonEmpty, "no reliable checkpoint behind the result")
-      assert(files.forall(_.startsWith("file:" + dir) || files.forall(_.contains(dir))),
-        files.toString)
-      // init + 4 rounds checkpointed, all but the final freed
-      import scala.jdk.CollectionConverters._
-      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("rdd-")).toSeq
-      assert(rddDirs.size == 1, s"expected 1 surviving rdd dir, got $rddDirs")
-      org.apache.spark.sql.graft.bridge.freeCheckpoint(fixed.df)
-      val after = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("rdd-")).toSeq
-      assert(after.isEmpty, s"final checkpoint not freed: $after")
-    } finally spark.conf.unset("spark.graft.checkpointDir")
-  }
-
   test("growth: a dup-carrying seed throws instead of false-converging") {
     // seed {1, 1} on edges 1→2: bfsStep's min-agg dedups, so round 1
     // produces 2 rows from a 2-row (1-distinct) seed — the count metric

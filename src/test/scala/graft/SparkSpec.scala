@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,17 +20,22 @@ object SparkSpec {
   private val dirs = new java.util.concurrent.atomic.AtomicLong()
 
   lazy val session: SparkSession = {
+    // the one test dir outside Workspace: the warehouse dir is a static
+    // conf, needed before the session exists, so it is deleted by its
+    // own listener when the session's application ends
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
-      // the one test dir outside Workspace: the warehouse dir is a
-      // static conf, needed before the session exists
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", wh)
       .config("spark.ui.enabled", "false")
       .appName("graft-test")
       .getOrCreate()
+    s.sparkContext.addSparkListener(new SparkListener {
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+        Workspace.rm(wh)
+    })
     s.sparkContext.setLogLevel("ERROR")
     s
   }
