@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Artifacts are `Workspace` dirs of kind `mv` keyed by the application
   * id, so concurrent sessions and test suites never share artifacts
   * across data directories, and an application's artifacts are deleted
-  * when it ends.
+  * when it ends. They are read back through [[Sources]], so a warm call
+  * hands out the session's frame of the artifact and starts no job.
   */
 object Materialize {
   /** Seconds spent building each stage (logical key → build wall time),
@@ -47,14 +48,14 @@ object Materialize {
   }
 
   def once(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    s.read.parquet(stage(s, key)(build.write.mode("overwrite").parquet(_)))
+    Sources.parquet(s, stage(s, key)(build.write.mode("overwrite").parquet(_)))
 
   /** `once` for a pipeline stage that produces TWO frames in one build
     * (e.g. a PQ index's codebook + codes): both are written under ONE
     * key, so "the frames come from the same build" is structural — a
     * cold path can never run the expensive builder once per frame
-    * (VERDICT r13 What's-wrong 2), and a warm path serves both from
-    * parquet without touching the builder (by-name laziness). */
+    * (VERDICT r13 What's-wrong 2), and a warm path serves both frames
+    * without touching the builder (by-name laziness). */
   def oncePair(s: SparkSession, key: String)(
       build: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
     val path = stage(s, key) { out =>
@@ -62,6 +63,6 @@ object Materialize {
       a.write.mode("overwrite").parquet(s"$out/a")
       b.write.mode("overwrite").parquet(s"$out/b")
     }
-    (s.read.parquet(s"$path/a"), s.read.parquet(s"$path/b"))
+    (Sources.parquet(s, s"$path/a"), Sources.parquet(s, s"$path/b"))
   }
 }

@@ -19,10 +19,13 @@ import org.apache.spark.sql.graft.bridge
   * that ONE RDD in a `LogicalRDD`, so no later action re-plans the
   * subtree. Eager only adds `RDD.doCheckpoint()`, one more job for the
   * final stage. So a pin is lazy — its first consumer's job fills the
-  * blocks later consumers read — and [[now]] is for callers that free
-  * the copy's inputs next (a loop round), which an unmaterialized copy
-  * would have to recompute. The copy's stats are the optimizer's
-  * estimate, not measured sizes.
+  * blocks later consumers read — and [[now]] is for two callers: one
+  * that frees the copy's inputs next (a loop round), which an
+  * unmaterialized copy would have to recompute, and one whose
+  * `Par.fork`ed leg runs concurrently, where materializing now is what
+  * overlaps the two legs' jobs (a lazy copy would defer its jobs until
+  * after the join). The copy's stats are the optimizer's estimate, not
+  * measured sizes.
   */
 object Pin extends (DataFrame => DataFrame) {
   /** `df`, stored once for every later reader; its first consumer
@@ -30,7 +33,8 @@ object Pin extends (DataFrame => DataFrame) {
   def apply(df: DataFrame): DataFrame = pin(df, eager = false)
 
   /** `df`, stored and materialized before this returns: only where the
-    * caller frees the copy's inputs next. */
+    * caller frees the copy's inputs next, or where a `Par.fork`ed leg
+    * runs concurrently. */
   def now(df: DataFrame): DataFrame = pin(df, eager = true)
 
   /** Free a pinned frame's blocks and checkpoint files — only once its

@@ -7,6 +7,11 @@ import org.apache.spark.sql.types._
 /** Readers for the driver's testdata tables (TESTDATA.md) plus shared
   * type-normalization helpers.
   *
+  * Every table is read through [[Sources]]: its schema is inferred once
+  * per session, and the frames of `documents`, `embeddings` and `events`
+  * are memoized after fan-out and normalization, so a key that reads a
+  * table the session has read before starts no job to build its frame.
+  *
   * Determinism conventions (SURVEY.md §7.4) used across all operators:
   *   - money is `DecimalType(18,2)` INTERNALLY (exact, order-independent
   *     sums; doubles would drift between Spark and the DuckDB oracle) but
@@ -22,7 +27,7 @@ import org.apache.spark.sql.types._
 object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")
@@ -47,10 +52,12 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  def documents(s: SparkSession, d: String): DataFrame =
-    fanOut(s, t(s, d, "documents"))
-  def embeddings(s: SparkSession, d: String): DataFrame =
-    fanOut(s, t(s, d, "embeddings"))
+  /** A fanned-out table, memoized: the partition probe runs once. */
+  private def fanned(s: SparkSession, d: String, name: String): DataFrame =
+    Sources.memo(s, s"$d/$name.parquet", "fanOut")(fanOut(s, t(s, d, name)))
+
+  def documents(s: SparkSession, d: String): DataFrame = fanned(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = fanned(s, d, "embeddings")
 
   /** events.parquet carries `ts` as TIMESTAMP(MICROS) without a UTC
     * annotation in every testdata scale, which Spark reads as
@@ -63,30 +70,28 @@ object Tables {
     * The nanos flag is carried by a CLONED session (not set/unset on the
     * caller's, which would race when two queries build plans
     * concurrently); the clone shares the SparkContext, so the resulting
-    * frame composes with frames from the original session.
+    * frame composes with frames from the original session. The
+    * normalized frame is memoized per session and path, so the clone is
+    * made once for each, not once per call.
     */
-  // one nanos-enabled clone per source session (clones register listener
-  // buses on the shared context — per-call cloning would accumulate them)
-  private val nanosSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-
   def events(s: SparkSession, d: String): DataFrame = {
-    val iso = nanosSessions.computeIfAbsent(s, _ =>
-      org.apache.spark.sql.graft.bridge.sessionWithConf(
-        s, "spark.sql.legacy.parquet.nanosAsLong" -> "true"))
-    val raw = fanOut(iso, iso.read.parquet(s"$d/events.parquet"))
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // integer div, NOT `/`: long./(long) widens to double, whose
-        // 256ns ulp at 1.7e18 corrupts ~2% of timestamps by 1µs
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType =>
-        // µs-precision files without timezone annotation read as NTZ,
-        // which unix_micros/window functions reject — normalize to the
-        // session-zoned type (UTC session ⇒ identical wall times)
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
+    val path = s"$d/events.parquet"
+    Sources.memo(s, path, "events") {
+      val iso = org.apache.spark.sql.graft.bridge.sessionWithConf(
+        s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      val raw = fanOut(iso, iso.read.parquet(path))
+      raw.schema("ts").dataType match {
+        case LongType =>
+          // integer div, NOT `/`: long./(long) widens to double, whose
+          // 256ns ulp at 1.7e18 corrupts ~2% of timestamps by 1µs
+          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case _: TimestampNTZType =>
+          // µs-precision files without timezone annotation read as NTZ,
+          // which unix_micros/window functions reject — normalize to the
+          // session-zoned type (UTC session ⇒ identical wall times)
+          raw.withColumn("ts", col("ts").cast(TimestampType))
+        case _ => raw
+      }
     }
   }
 

@@ -22,19 +22,21 @@ object Workspace {
   /** Applications whose SparkContext carries a [[Cleaner]]. */
   private val watched = ConcurrentHashMap.newKeySet[String]()
 
-  /** Deletes application `app`'s dirs when that application ends. */
+  /** Deletes application `app`'s dirs, and forgets its `Sources` frames,
+    * when that application ends. */
   private[graft] final class Cleaner(app: String) extends SparkListener {
     override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
       val prefix = app + "|"
       dirs.keySet.asScala.filter(_.startsWith(prefix)).foreach { id =>
         Option(dirs.remove(id)).foreach(rm)
       }
+      Sources.drop(app)
       watched.remove(app)
     }
   }
 
   /** The session's application id, its Cleaner registered on first use. */
-  private def appOf(s: SparkSession): String = {
+  private[graft] def appOf(s: SparkSession): String = {
     val sc = s.sparkContext
     val app = sc.applicationId
     if (watched.add(app)) sc.addSparkListener(new Cleaner(app))

@@ -1630,12 +1630,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
         shard.select("doc_id", "text"))
       .filter(col("is_dup") === 1).select("doc_id")
     // survivor pin: feeds the per-source count, the rank and the
-    // admit re-join
+    // admit re-join; `Pin.now` so the gates run while
+    // deltaAdmittedOf's forked corpus leg does
     manifestRowsOf(shard,
         Seq(col("source"), size(tokens).cast("long").as("n_tokens")))
       .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      .transform(Pin)
+      .transform(Pin.now)
   }
 
   /** The delta chain below the manifest: shard survivors → frozen-quota
@@ -1692,9 +1693,10 @@ private[llm] trait TextPacking { self: TextOps.type =>
       .join(quota.hint("shuffle_hash"), Seq("source"))
       .filter(col("rnk") < col("quota"))
       .select("doc_id")
+    // `Pin.now`: the admission chain runs while baseBinLeg does
     val admitted = survS
       .join(adm.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-      .transform(Pin)
+      .transform(Pin.now)
     // append at the next EMPTY bin: base = ceil(Σ selected corpus
     // tokens / 2048), one stored-index aggregate (the A10 pattern) —
     // computed on the forked leg above, joined here
