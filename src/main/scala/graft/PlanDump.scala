@@ -117,11 +117,9 @@ object PlanDump {
           "input is the stored codes scan."),
       "embedding_quantize" ->
         ("Int8 PTQ audit is pure per-row map work: ONE embeddings scan, " +
-          "no join, no aggregate exchange — the only exchanges are the " +
-          "small-file fan-out repartition (Tables.fanOut, a no-op at " +
-          "real scale) and the final ORDER BY's range partitioning; " +
-          "the quantize/error expressions are chained Projects over " +
-          "the scan."),
+          "no join, no aggregate exchange — the only exchange is the " +
+          "final ORDER BY's range partitioning; the quantize/error " +
+          "expressions are chained Projects over the scan."),
       "packing_efficiency" ->
         ("Three-strategy audit: the token-count frame is pinned behind " +
           "one checkpoint (ExistingRDD feeds all three legs); the " +

@@ -7,10 +7,14 @@ import org.apache.spark.sql.types._
 /** Readers for the driver's testdata tables (TESTDATA.md) plus shared
   * type-normalization helpers.
   *
-  * Every table is read through [[Sources]]: its schema is inferred once
-  * per session, and the frames of `documents`, `embeddings` and `events`
-  * are memoized after fan-out and normalization, so a key that reads a
-  * table the session has read before starts no job to build its frame.
+  * Every table is read through [[Sources.table]], one rule for all of
+  * them: its schema is inferred once per session, so a key that reads a
+  * table the session has read before starts no job to build its frame,
+  * and a single-file source large enough to pay for it is scanned from
+  * a split copy written once per application, so its scan, and the
+  * per-row work above it (shingle explosion, embedding kernels, JSON
+  * parsing), runs on every core. The `events` frame is memoized after
+  * its normalization, over the same split scan.
   *
   * Determinism conventions (SURVEY.md §7.4) used across all operators:
   *   - money is `DecimalType(18,2)` INTERNALLY (exact, order-independent
@@ -27,7 +31,7 @@ import org.apache.spark.sql.types._
 object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Sources.parquet(spark, s"$dir/$name.parquet")
+    Sources.table(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")
@@ -37,27 +41,8 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
 
-  /** Fan a small scan out to all cores before heavy per-row expansion.
-    *
-    * The testdata files are single-row-group parquet, so Spark cannot
-    * split them — every downstream map pipeline (shingle explosion +
-    * md5, embedding kernels, JSON parsing) would run on ONE core no
-    * matter the `maxPartitionBytes` setting. A round-robin repartition
-    * of a few-MB scan costs nothing and parallelizes the expensive
-    * generation 32×. Conditional on the scan's partition count: at real
-    * scale inputs are many files / many row groups, already split, and
-    * this is a no-op (no extra shuffle). */
-  private def fanOut(s: SparkSession, df: DataFrame): DataFrame = {
-    val target = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** A fanned-out table, memoized: the partition probe runs once. */
-  private def fanned(s: SparkSession, d: String, name: String): DataFrame =
-    Sources.memo(s, s"$d/$name.parquet", "fanOut")(fanOut(s, t(s, d, name)))
-
-  def documents(s: SparkSession, d: String): DataFrame = fanned(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = fanned(s, d, "embeddings")
+  def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 
   /** events.parquet carries `ts` as TIMESTAMP(MICROS) without a UTC
     * annotation in every testdata scale, which Spark reads as
@@ -72,14 +57,16 @@ object Tables {
     * concurrently); the clone shares the SparkContext, so the resulting
     * frame composes with frames from the original session. The
     * normalized frame is memoized per session and path, so the clone is
-    * made once for each, not once per call.
+    * made once for each, not once per call. The clone scans the same
+    * split copy as any other table (`Sources.scan`), and the
+    * normalization runs over it.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val path = s"$d/events.parquet"
     Sources.memo(s, path, "events") {
       val iso = org.apache.spark.sql.graft.bridge.sessionWithConf(
         s, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-      val raw = fanOut(iso, iso.read.parquet(path))
+      val raw = Sources.scan(iso, path)
       raw.schema("ts").dataType match {
         case LongType =>
           // integer div, NOT `/`: long./(long) widens to double, whose

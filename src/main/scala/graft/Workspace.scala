@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 
 /** Where the engine's temp state lives and when it is deleted.
   *
-  * Every temp dir the engine writes (Materialize stages, the source
-  * round-trip sinks, checkpoint dirs) is a `java.io.tmpdir/graft_<kind>*`
+  * Every temp dir the engine writes (Materialize stages, the split
+  * copies of coarse sources, the source round-trip sinks, checkpoint
+  * dirs) is a `java.io.tmpdir/graft_<kind>*`
   * dir handed out per (application id, kind, key). A dir lives as long as
   * its application: one listener per SparkContext deletes the
   * application's dirs on `onApplicationEnd` and forgets their entries, so

@@ -978,10 +978,18 @@ private[llm] trait TextPacking { self: TextOps.type =>
     *   → corpus_clean (language / quality-floor / PII / exact-dedup
     *     gates) → leakage_safe_split (keep the train shard)
     *   → sequence_pack (token offsets + 2048-token bins).
-    * Survivors = the INTERSECTION of the three gate stages — each
-    * composed as a left-semi join of its shipped frame-level plan
-    * ([[qualityBandOf]], [[corpusCleanOf]], [[leakageSafeSplitOf]]) —
-    * then packed by the shipped [[packOf]]. No stage materializes an
+    * Survivors = the INTERSECTION of the three gate stages, folded into
+    * one pass built from the stages' own pieces: one projection of row
+    * predicates (the clean row gate [[cleanRowsOf]] and the train split
+    * [[splitOf]]), a broadcast lookup of the domain-bounded band table
+    * ([[qualityBandTableOf]] over every doc's [[bandScore]]), and one
+    * semi-join against the exact-dedup canon ([[canonOf]]) — then packed
+    * by the shipped [[packOf]]. The fold equals the stagewise
+    * intersection of doc_id sets only because doc_id is the documents
+    * key: a row passes a gate exactly when its doc_id is in that stage's
+    * set. doc_id is unique in GenData, in the testdata and in the fuzz
+    * corpus (`len(docs)`); a corpus with repeated doc_ids would need the
+    * stagewise semi-joins back. No stage materializes an
     * intermediate corpus copy (script pipelines write one per stage;
     * at 100 TB that is 3 corpus copies of dead I/O): Catalyst plans
     * the whole chain as one dataflow, and the only actions are
@@ -1001,28 +1009,30 @@ private[llm] trait TextPacking { self: TextOps.type =>
       val spanLeg = graft.Par.fork(
         Option(docs.agg(max(col("doc_id"))).first().get(0))
           .map(_.asInstanceOf[Long]).getOrElse(0L))
-      val keepBand = qualityBandOf(docs)
-        .filter(col("keep_flag") === 1).select("doc_id")
-      val clean = corpusCleanOf(docs).select("doc_id")
-      val train = leakageSafeSplitOf(docs)
-        .filter(col("split") === "train").select("doc_id")
-      // the gate lists are corpus-derived doc_id sets — shuffle_hash,
-      // never a static broadcast that only fits at bench scale (the
-      // pagerank rule); the three semis reuse one doc_id partitioning
       // NARROW probe side (guide §2.3/§8, r20): packing needs only
       // (doc_id, n_tokens), so the token count is computed AT THE SCAN
-      // and the text payload never crosses the semi-join exchanges or
-      // enters the checkpoint blocks — the same values packOf would
+      // and the text payload never crosses the canon semi-join exchange
+      // or enters the checkpoint blocks — the same values packOf would
       // derive, relocated (packOf ≡ packCountsOf over this projection;
       // a semi-join filters rows, never reads probe-side columns)
-      val survivors = docs
-        .select(col("doc_id"), size(tokens).cast("long").as("n_tokens"))
-        .join(keepBand.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .join(train.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
+      val rows = cleanRowsOf(docs)
+        .filter(splitOf(splitHash) === "train")
+        .select(col("doc_id"), col("n_tokens"),
+          bandLang.as("lang"), bandScore.as("q"))
+      val bands = qualityBandTableOf(qualityScoredOf(docs))
+      // the band table is domain-bounded (≤ n_langs·1001 rows), so it is
+      // broadcast; the canon is a corpus-derived doc_id set — shuffle_hash,
+      // never a static broadcast that only fits at bench scale (the
+      // pagerank rule)
+      val survivors = rows
+        .join(broadcast(bands),
+          col("lang") === col("bl") && col("q") === col("v"))
+        .filter(col("band") <= 2)
+        .select("doc_id", "n_tokens")
+        .join(canonOf(docs).hint("shuffle_hash"), Seq("doc_id"), "left_semi")
         // pin the survivor projection: the packer reads its input twice
         // (chunk totals + offset join-back) — without the pin the whole
-        // gate chain (band histogram, clean gates, split hash) would
+        // gate chain (band histogram, clean gates, canon) would
         // re-execute per use. This is block reuse of the survivor rows,
         // not a per-stage corpus copy
         .transform(Pin)

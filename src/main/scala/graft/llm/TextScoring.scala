@@ -190,29 +190,41 @@ private[llm] trait TextScoring { self: TextOps.type =>
     * docs can neither dilute a language's terciles nor sneak into
     * band 1 of a sentinel-dominated language. */
   def qualityBandOf(docs: DataFrame): DataFrame = {
-    val scored = docs
-      .select(col("doc_id"), coalesce(col("lang"), lit("")).as("lang"),
-        coalesce(
-          expr(s"(1000 * cast(${stopCount(stopWords7)} as bigint)) " +
-            "div greatest(cast(size(filter(split(lower(text), ' '), w -> w != '')) as bigint), 1)"),
-          lit(-1L)).as("q"))
+    val scored = qualityScoredOf(docs)
+    scored
+      .join(broadcast(qualityBandTableOf(scored)),
+        col("lang") === col("bl") && col("q") === col("v"), "left")
+      .select(col("doc_id"), col("lang"), col("q").as("stop_milli"),
+        coalesce(col("band"), lit(3L)).as("band"),
+        (coalesce(col("band"), lit(3L)) <= 2).cast("long").as("keep_flag"))
+  }
+
+  /** The per-row half of [[qualityBandOf]]: (doc_id, lang, q), a doc's
+    * banding language (NULL → '') and its score, the stopword
+    * milli-ratio (NULL text → −1, never banded). */
+  private[llm] def qualityScoredOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), bandLang.as("lang"), bandScore.as("q"))
+  private[llm] val bandLang: Column = coalesce(col("lang"), lit(""))
+  private[llm] val bandScore: Column = coalesce(
+    expr(s"(1000 * cast(${stopCount(stopWords7)} as bigint)) " +
+      "div greatest(cast(size(filter(split(lower(text), ' '), w -> w != '')) as bigint), 1)"),
+    lit(-1L))
+
+  /** The band-table half of [[qualityBandOf]]: (bl, v, band) per
+    * language and score value of `scored` (doc_id, lang, q), from the
+    * domain-bounded (lang, value) histogram of its real scores. */
+  private[llm] def qualityBandTableOf(scored: DataFrame): DataFrame = {
     val hist = scored.filter(col("q") >= 0)
       .groupBy(col("lang"), col("q").as("v"))
       .agg(count(lit(1)).as("cnt"))
     val above = Window.partitionBy("lang").orderBy(col("v").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val whole = Window.partitionBy("lang")
-    val bands = hist
+    hist
       .withColumn("cum", coalesce(sum(col("cnt")).over(above), lit(0L)))
       .withColumn("n", sum(col("cnt")).over(whole))
       .select(col("lang").as("bl"), col("v"),
         expr("1 + least(2, (3 * cum) div n)").cast("long").as("band"))
-    scored
-      .join(broadcast(bands),
-        col("lang") === col("bl") && col("q") === col("v"), "left")
-      .select(col("doc_id"), col("lang"), col("q").as("stop_milli"),
-        coalesce(col("band"), lit(3L)).as("band"),
-        (coalesce(col("band"), lit(3L)) <= 2).cast("long").as("keep_flag"))
   }
 
   val qualityBandFilter = QuerySpec(
@@ -934,13 +946,18 @@ private[llm] trait TextScoring { self: TextOps.type =>
     * shared by the query key and the composed pipeline_quality_pack. */
   def leakageSafeSplitOf(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), col("source"),
-        expr("conv(substring(md5(concat('grp-v1:', source)), 1, 8), 16, 10)")
-          .cast("long").as("h"))
+      .select(col("doc_id"), col("source"), splitHash.as("h"))
       .select(col("doc_id"), col("source"), (col("h") % 100).as("bucket"),
-        when(col("h") % 100 < 80, "train")
-          .when(col("h") % 100 < 90, "val")
-          .otherwise("test").as("split"))
+        splitOf(col("h")).as("split"))
+
+  /** A doc's group hash: the salted md5 of its `source`. */
+  private[llm] val splitHash: Column =
+    expr("conv(substring(md5(concat('grp-v1:', source)), 1, 8), 16, 10)")
+      .cast("long")
+
+  /** The split of group hash `h`: 80 / 10 / 10 train / val / test. */
+  private[llm] def splitOf(h: Column): Column =
+    when(h % 100 < 80, "train").when(h % 100 < 90, "val").otherwise("test")
 
   val leakageSafeSplit = QuerySpec(
     "leakage_safe_split",
@@ -1019,7 +1036,14 @@ private[llm] trait TextScoring { self: TextOps.type =>
 
   /** The corpus-clean plan over any (doc_id, text) frame — shared by
     * the query key and the composed pipeline_quality_pack. */
-  def corpusCleanOf(docs: DataFrame): DataFrame = {
+  def corpusCleanOf(docs: DataFrame): DataFrame =
+    cleanRowsOf(docs).join(canonOf(docs), Seq("doc_id"), "left_semi")
+      .select("doc_id", "n_tokens", "stop_milli", "alpha_milli")
+
+  /** The row-gate half of [[corpusCleanOf]]: `docs` with n_tokens,
+    * stop_milli and alpha_milli, keeping the rows that pass the
+    * language, quality-floor and PII gates. */
+  private[llm] def cleanRowsOf(docs: DataFrame): DataFrame = {
     val withCounts = withLangCounts(docs)
     val best = greatest(langs.map { case (l, _) => col(s"cnt_$l") }: _*)
     // en leads the precedence order, so cnt_en == best ⇔ pred = 'en'
@@ -1027,7 +1051,7 @@ private[llm] trait TextScoring { self: TextOps.type =>
     val (email, url, digits) = (piiEmail, piiUrl, piiDigits)
     def piiCnt(p: String) =
       size(regexp_extract_all(col("text"), lit(p), lit(0))).cast("long")
-    val gated = withCounts
+    withCounts
       .withColumn("n_tokens", size(tokens).cast("long"))
       .withColumn("stop_cnt",
         expr(stopCount(Seq("the", "and", "of", "is", "a", "to", "in")))
@@ -1042,12 +1066,14 @@ private[llm] trait TextScoring { self: TextOps.type =>
         col("n_tokens") >= 20 && col("stop_milli") >= 10 &&
         col("alpha_milli") >= 600 &&
         piiCnt(email) + piiCnt(url) + piiCnt(digits) === 0)
-    val canon = docs.groupBy(md5(col("text")).as("h"))
+  }
+
+  /** The canon half of [[corpusCleanOf]]: the smallest doc_id of each
+    * exact text (md5 group). */
+  private[llm] def canonOf(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    gated.join(canon, Seq("doc_id"), "left_semi")
-      .select("doc_id", "n_tokens", "stop_milli", "alpha_milli")
-  }
 
   val corpusClean = QuerySpec(
     "corpus_clean",

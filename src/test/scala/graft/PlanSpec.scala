@@ -505,9 +505,8 @@ class PlanSpec extends SparkSpec {
     val p = plan("embedding_quantize")
     assert(!p.contains("Join"), s"per-row quantizer grew a join:\n$p")
     assert("Scan parquet".r.findAllIn(p).size == 1, s"plan scans:\n$p")
-    // no hash-partitioned shuffle (the only exchanges are the
-    // small-file fan-out round-robin and the final sort's range
-    // partitioning) and no single-partition collapse
+    // no hash-partitioned shuffle (the only exchange is the final
+    // sort's range partitioning) and no single-partition collapse
     assert(!p.contains("Exchange hashpartitioning") &&
       !p.contains("SinglePartition"),
       s"per-row quantizer introduced a shuffle:\n$p")

@@ -9,7 +9,11 @@ import org.apache.spark.sql.graft.bridge
   * contract under test: a second read of a table or a `Materialize`
   * artifact in one session starts no Spark job and hands back the same
   * frame, a rewritten path is read again, an ended application's frames
-  * are forgotten, and every session gets its own frame. */
+  * are forgotten, and every session gets its own frame. A single-file
+  * source above the split floor is scanned from one split copy per
+  * application, with the raw rows and schema on every core; a rewritten
+  * source is split again, and a multi-file or small source is read as
+  * it is. */
 class SourcesSpec extends SparkSpec {
 
   /** `body`'s result and the Spark jobs it started, counted by a
@@ -31,6 +35,76 @@ class SourcesSpec extends SparkSpec {
 
   private def sumOf(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(sum(col("doc_id"))).head().getLong(0)
+
+  private def cores = spark.sparkContext.defaultParallelism
+
+  /** The dirs a frame's scan reads its files from. */
+  private def dirsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath).toSet
+
+  private def isSplitCopy(dir: String): Boolean =
+    java.nio.file.Paths.get(dir).getParent.getFileName.toString.startsWith("graft_split")
+
+  /** `n` rows of (id, md5 of id), about 45 bytes each uncompressed,
+    * written to `dir/t.parquet` as `files` files. */
+  private def writeRows(dir: String, n: Long, files: Int): String = {
+    val path = s"$dir/t.parquet"
+    spark.range(n).select(col("id"), md5(col("id").cast("string")).as("h"))
+      .repartition(files).write.mode("overwrite").parquet(path)
+    path
+  }
+
+  /** Rows well above the split floor: ten times its bytes at 45 a row. */
+  private def aboveFloor: Long = 10 * Sources.SplitFloorBytesPerCore * cores / 45
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("a single-file source above the floor is scanned from one split copy on every core") {
+    val path = writeRows(tempDir("sources"), aboveFloor, 1)
+    val raw = spark.read.parquet(path)
+    assert(raw.rdd.getNumPartitions == 1, "fixture should be one file")
+    val s = spark.newSession()
+    val df = Sources.table(s, path)
+    val Seq(copy) = dirsOf(df).toSeq
+    assert(isSplitCopy(copy), s"scan reads $copy, not a split copy")
+    assert(df.rdd.getNumPartitions == cores)
+    assert(df.schema == raw.schema)
+    assert(df.count() == aboveFloor && sameRows(df, raw))
+    val (again, jobs) = jobsOf(Sources.table(s, path))
+    assert(jobs == 0 && (again eq df), s"a warm read started $jobs jobs")
+    // a later session of the same application scans the same copy: its
+    // first read infers the schema, and writes nothing
+    val other = spark.newSession()
+    val (theirs, firstJobs) = jobsOf(Sources.table(other, path))
+    assert(dirsOf(theirs) == Set(copy))
+    assert(firstJobs == 1, s"a second session's first read started $firstJobs jobs")
+  }
+
+  test("a multi-file or below-floor source gets no copy") {
+    val multi = Sources.table(spark, writeRows(tempDir("sources"), aboveFloor, cores))
+    assert(dirsOf(multi).forall(!isSplitCopy(_)), s"${dirsOf(multi)}")
+    assert(multi.rdd.getNumPartitions == cores)
+    val small = Sources.table(spark.newSession(),
+      writeRows(tempDir("sources"), aboveFloor / 20, 1))
+    assert(dirsOf(small).forall(!isSplitCopy(_)), s"${dirsOf(small)}")
+    assert(small.rdd.getNumPartitions == 1)
+    assert(dirsOf(Tables.nation(spark, sf)).forall(!isSplitCopy(_)))
+  }
+
+  test("a rewritten source is split again and its rows follow the new file") {
+    val dir = tempDir("sources")
+    val before = Sources.table(spark, writeRows(dir, aboveFloor, 1))
+    assert(before.count() == aboveFloor)
+    val path = writeRows(dir, 2 * aboveFloor, 1)
+    val after = Sources.table(spark, path)
+    assert(after ne before)
+    val (b, a) = (dirsOf(before), dirsOf(after))
+    assert(a.forall(isSplitCopy) && a != b, s"rewritten source still reads $b")
+    assert(after.count() == 2 * aboveFloor &&
+      sameRows(after, spark.read.parquet(path)))
+  }
 
   test("a second read of a table in one session starts no job and returns the same rows") {
     val s = spark.newSession()

@@ -41,6 +41,21 @@ class WorkspaceSpec extends SparkSpec {
     assert(sources.Io.readOrc(spark, s"$orcDir/dim_location").count() == orcRows)
   }
 
+  test("a split copy is deleted on its application's end event") {
+    // a single-file source above the split floor, copied for a second,
+    // synthetic application
+    val path = s"${tempDir("ws")}/t.parquet"
+    val n = 10 * Sources.SplitFloorBytesPerCore * spark.sparkContext.defaultParallelism / 8
+    spark.range(n).coalesce(1).write.mode("overwrite").parquet(path)
+    val dead = s"app-ended-${System.nanoTime()}"
+    val df = Sources.scan(dead, spark, path)
+    val copy = Paths.get(new java.net.URI(df.inputFiles.head)).getParent.getParent
+    assert(copy.getFileName.toString.startsWith("graft_split"))
+    assert(df.count() == n)
+    new Workspace.Cleaner(dead).onApplicationEnd(SparkListenerApplicationEnd(0L))
+    assert(!Files.exists(copy), "an ended application's split copy survived")
+  }
+
   test("a dir is handed out once per (application, kind, key)") {
     val a = tempDir("ws")
     val b = tempDir("ws")

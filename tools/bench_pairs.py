@@ -3,6 +3,7 @@
 
     python3 tools/bench_pairs.py --pairs 10 [--parent REV] [--change REV]
         [--workloads warehouse,pipelines] [--seconds 14] [--root DIR]
+        [--swap-after N]
 
 Both sides are built from `git archive` into sibling dirs `<root>/parent`
 and `<root>/change` (one volume, both fresh copies, so neither side runs
@@ -21,6 +22,11 @@ the change won (strictly better in the metric's direction) and the IQR
 test: whether the medians are further apart than the parent's
 interquartile range. `--json FILE` also writes every run's metrics.
 Nothing is written under the repo.
+
+`--swap-after N` makes each side run from the other's dir from pair N+1
+on. In an A/A set (`--parent HEAD --change HEAD`) a lean that follows the
+dir flips sign at the swap, and one that follows the side's name or its
+place in the pair does not.
 """
 import argparse
 import json
@@ -132,6 +138,8 @@ def main():
     ap.add_argument("--seed0", type=int, default=1)
     ap.add_argument("--root", default=str(Path(tempfile.gettempdir()) / "bench_pairs"))
     ap.add_argument("--json", default=None, help="also write every run here")
+    ap.add_argument("--swap-after", type=int, default=None,
+                    help="run each side from the other's dir after this pair")
     a = ap.parse_args()
 
     root = Path(a.root).resolve()
@@ -150,12 +158,16 @@ def main():
         print(f"warm-up {name}: {r['wall_s']} s", file=sys.stderr)
 
     report = {"parent": a.parent, "change": a.change or "worktree",
-              "seconds": a.seconds, "workloads": {}}
+              "seconds": a.seconds, "swap_after": a.swap_after,
+              "workloads": {}}
     for w in workloads:
         pairs = []
         for i in range(a.pairs):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-            p = {n: run(sides[n], w, a.seed0 + i, a.seconds) for n in order}
+            swap = a.swap_after is not None and i >= a.swap_after
+            dirs = {"parent": sides["change"], "change": sides["parent"]} \
+                if swap else sides
+            p = {n: run(dirs[n], w, a.seed0 + i, a.seconds) for n in order}
             pairs.append(p)
             print(f"{w} pair {i + 1}/{a.pairs}: pass_s "
                   f"{p['parent']['metrics']['pass_s']:.3f} -> "
