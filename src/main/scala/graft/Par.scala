@@ -13,7 +13,12 @@ package graft
   * creator had when the pool grew.
   *
   * Use ONLY where two legs have no data dependency, so the second leg's
-  * tasks back-fill executors freed by the first leg's stragglers.
+  * tasks back-fill executors freed by the first leg's stragglers: the
+  * mixture apportionment beside the bucket rank (`repeat_upsample`,
+  * `mixtureSelectOf`) and the frozen corpus state and its append base
+  * beside the shard gates (`deltaAdmittedOf`). A bound over an input
+  * table is no leg: `Tables.maxOf` memoizes it, so only its first call
+  * in a session starts a job.
   * Materialize.once stays correct under this concurrency by design
   * (putIfAbsent keeps the first build; a racing duplicate is
   * wasted-but-identical work — MaterializeConcurrencySpec pins it). */

@@ -22,7 +22,8 @@ import org.apache.spark.sql.graft.bridge
   * blocks later consumers read — and [[now]] is for two callers: one
   * that frees the copy's inputs next (a loop round), which an
   * unmaterialized copy would have to recompute, and one whose
-  * `Par.fork`ed leg runs concurrently, where materializing now is what
+  * `Par.fork`ed leg runs concurrently (`deltaAdmittedOf`'s corpus state
+  * and append base), where materializing now is what
   * overlaps the two legs' jobs (a lazy copy would defer its jobs until
   * after the join). The copy's stats are the optimizer's estimate, not
   * measured sizes.

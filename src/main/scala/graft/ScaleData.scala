@@ -71,8 +71,7 @@ object ScaleData {
     // id ranges can never collide whatever the base corpus size
     val strides: Map[String, Long] = familyDomain.map {
       case (fam, (tbl, c)) =>
-        fam -> (Option(byName(tbl).agg(max(col(c))).first().get(0))
-          .map(_.toString.toLong).getOrElse(0L) + 1L)
+        fam -> (Tables.maxOf(spark, sfDir, tbl, c).getOrElse(0L) + 1L)
     }
     tables.foreach { case (name, df) =>
       val reps = (0 until k).map { i =>

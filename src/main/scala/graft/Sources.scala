@@ -15,7 +15,8 @@ import scala.jdk.CollectionConverters._
   * and infer the schema, and lists the files again; a frame built from
   * it once already carries both, so a memo hit starts no job and lists
   * nothing. A `view` names a frame derived from the raw read (an input
-  * table, the normalized events) that is memoized beside it.
+  * table, the normalized events), or a scalar computed over it (a
+  * table's `max(id)`, `Tables.maxOf`), that is memoized beside it.
   *
   * Input tables ([[table]]) are scanned on every core. A source whose
   * scan has fewer partitions than the application's
@@ -44,7 +45,7 @@ import scala.jdk.CollectionConverters._
 object Sources {
   private final case class Key(
       app: String, session: SparkSession, path: String, view: String)
-  private final case class Entry(mtime: Long, df: DataFrame)
+  private final case class Entry(mtime: Long, value: Any)
 
   private val entries = new ConcurrentHashMap[Key, Entry]()
 
@@ -102,18 +103,18 @@ object Sources {
     }
   }
 
-  /** `read` — a frame over `path` — built once per session and `view`,
-    * and again only when `path` has been rewritten since. */
-  def memo(s: SparkSession, path: String, view: String)(
-      read: => DataFrame): DataFrame =
+  /** `read` — a frame over `path`, or a value derived from one — built
+    * once per session and `view`, and again only when `path` has been
+    * rewritten since. */
+  def memo[A](s: SparkSession, path: String, view: String)(read: => A): A =
     memo(Workspace.appOf(s), s, path, view)(read)
 
-  private[graft] def memo(app: String, s: SparkSession, path: String,
-      view: String)(read: => DataFrame): DataFrame = {
+  private[graft] def memo[A](app: String, s: SparkSession, path: String,
+      view: String)(read: => A): A = {
     val key = Key(app, s, path, view)
     val mtime = modified(s, path)
     val hit = entries.get(key)
-    if (hit != null && hit.mtime == mtime) hit.df
+    if (hit != null && hit.mtime == mtime) hit.value.asInstanceOf[A]
     else if (mtime < 0) read // a missing path: the read raises Spark's error
     else {
       // built outside any lock (a first read may write a split copy); of
@@ -122,11 +123,11 @@ object Sources {
       val prev =
         if (hit == null) entries.putIfAbsent(key, fresh)
         else { entries.put(key, fresh); null }
-      if (prev != null && prev.mtime == mtime) prev.df else fresh.df
+      (if (prev != null && prev.mtime == mtime) prev else fresh).value.asInstanceOf[A]
     }
   }
 
-  /** Forget an ended application's frames (`Workspace.Cleaner`). */
+  /** Forget an ended application's entries (`Workspace.Cleaner`). */
   private[graft] def drop(app: String): Unit =
     entries.keySet.removeIf(_.app == app)
 

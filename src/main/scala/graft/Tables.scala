@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * a split copy written once per application, so its scan, and the
   * per-row work above it (shingle explosion, embedding kernels, JSON
   * parsing), runs on every core. The `events` frame is memoized after
-  * its normalization, over the same split scan.
+  * its normalization, over the same split scan, and a source's
+  * `max(id)` ([[maxOf]]) beside its frame.
   *
   * Determinism conventions (SURVEY.md §7.4) used across all operators:
   *   - money is `DecimalType(18,2)` INTERNALLY (exact, order-independent
@@ -43,6 +44,21 @@ object Tables {
 
   def documents(s: SparkSession, d: String): DataFrame  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
+
+  /** `max(column)` of an input table as a long, `None` when the table
+    * is empty. It is one driver-side job, memoized beside the table's
+    * frame, so each (application, session, source, modification time)
+    * pays for it once and later calls start no job. The one place that
+    * reads the bound of a source's id column: split keys, pack spans,
+    * insert offsets, round counts and replica strides derive from it.
+    * `events` is read normalized, so a TIMESTAMP(NANOS) file works here
+    * too. */
+  def maxOf(s: SparkSession, d: String, table: String, column: String): Option[Long] =
+    Sources.memo(s, s"$d/$table.parquet", s"max($column)") {
+      val df = if (table == "events") events(s, d) else t(s, d, table)
+      Option(df.agg(max(col(column)).cast(LongType)).first().get(0))
+        .map(_.asInstanceOf[Long])
+    }
 
   /** events.parquet carries `ts` as TIMESTAMP(MICROS) without a UTC
     * annotation in every testdata scale, which Spark reads as

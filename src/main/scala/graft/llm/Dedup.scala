@@ -1162,15 +1162,14 @@ object Dedup {
   /** Shard/corpus split key for the incremental path: the top fifth of
     * doc_ids plays the "new crawl" shard, everything below is the
     * existing corpus. Derived from the data, not a fixed constant, so
-    * the 80/20 shape holds at every scale factor. One max() over the
-    * pruned doc_id column — the sanctioned scalar-feedback pattern
-    * (SURVEY §2 A10). */
+    * the 80/20 shape holds at every scale factor. The bound is the
+    * session's memoized `max(doc_id)` ([[graft.Tables.maxOf]]), so every
+    * delta key after the first starts no job for it. An EMPTY documents
+    * table gives split 0, which makes both corpus and shard empty, so
+    * the delta keys degrade to clean empty results, not a crash. */
   def deltaSplitOf(s: SparkSession, d: String): Long =
-    // null-safe: max over an EMPTY documents table is NULL (a bare
-    // getLong would NPE) — split 0 makes both corpus and shard empty,
-    // so the delta keys degrade to clean empty results, not a crash
-    Option(documents(s, d).agg(expr("(max(doc_id) + 1) * 4 div 5"))
-      .first().get(0)).map(_.toString.toLong).getOrElse(0L)
+    maxOf(s, d, "documents", "doc_id")
+      .map(m => (m + 1) * 4 / 5).getOrElse(0L)
 
   /** The EXISTING corpus's MinHash SIGNATURE index, materialized once
     * per (application, dir) — the static side of incremental dedup. At

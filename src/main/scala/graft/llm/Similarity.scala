@@ -764,11 +764,11 @@ object Similarity {
   }
 
   /** 80/20 vec_id split for the incremental ANN path — deltaSplitOf's
-    * rule (Dedup.scala) in the embedding domain, null-safe on an empty
-    * table for the same reason. */
+    * rule (Dedup.scala) in the embedding domain, over the memoized
+    * `max(vec_id)`, and 0 on an empty table for the same reason. */
   private[graft] def deltaVecSplitOf(s: SparkSession, d: String): Long =
-    Option(embeddings(s, d).agg(expr("(max(vec_id) + 1) * 4 div 5"))
-      .first().get(0)).map(_.toString.toLong).getOrElse(0L)
+    maxOf(s, d, "embeddings", "vec_id")
+      .map(m => (m + 1) * 4 / 5).getOrElse(0L)
 
   /** The EXISTING corpus's PQ index (codebook + codes), materialized
     * once per (application, dir) — the delta_dedup incremental pattern

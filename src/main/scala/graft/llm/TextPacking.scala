@@ -85,10 +85,10 @@ private[llm] trait TextPacking { self: TextOps.type =>
   /** [[packCountsOf]] with the chunk span precomputed — the output is
     * span-invariant (chunking only decomposes the prefix sum), so a
     * caller may derive the span from any UPPER bound on its input's
-    * doc_id domain (e.g. max(doc_id) of a SUPERSET corpus, forked per
-    * guide §2.6 so the sizing scan overlaps the caller's other legs
-    * instead of serializing after them); the ≤64k-chunk bound still
-    * holds because chunk = doc_id div span ≤ bound div span. */
+    * doc_id domain (e.g. the memoized max(doc_id) of a SUPERSET
+    * corpus, `Tables.maxOf`, which costs no job after the session's
+    * first); the ≤64k-chunk bound still holds because
+    * chunk = doc_id div span ≤ bound div span. */
   def packCountsWithSpan(counts: DataFrame, chunkSpan: Long): DataFrame = {
     val binTokens = 2048L
     val toks = counts.select(col("doc_id"), col("n_tokens"),
@@ -992,23 +992,14 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * stagewise semi-joins back. No stage materializes an
     * intermediate corpus copy (script pipelines write one per stage;
     * at 100 TB that is 3 corpus copies of dead I/O): Catalyst plans
-    * the whole chain as one dataflow, and the only actions are
-    * packOf's sanctioned scalar feedback. The oracle composes the
+    * the whole chain as one dataflow, and the only scalar feedback is
+    * the session's memoized max(doc_id). The oracle composes the
     * SAME shared CTE blocks the component keys use, so the pipeline
     * can never drift from its stages. */
   val pipelineQualityPack = QuerySpec(
     "pipeline_quality_pack",
     (s, d) => {
       val docs = documents(s, d)
-      // span bound forked over the RAW corpus (guide §2.6, r20): the
-      // chunk span only needs an UPPER bound on survivor doc_id —
-      // packCountsWithSpan output is span-invariant — so max(doc_id)
-      // over documents (a survivor superset, a doc_id-only column scan)
-      // runs CONCURRENTLY with the gate-chain job instead of as a
-      // sequential action over the checkpointed survivors.
-      val spanLeg = graft.Par.fork(
-        Option(docs.agg(max(col("doc_id"))).first().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L))
       // NARROW probe side (guide §2.3/§8, r20): packing needs only
       // (doc_id, n_tokens), so the token count is computed AT THE SCAN
       // and the text payload never crosses the canon semi-join exchange
@@ -1036,7 +1027,11 @@ private[llm] trait TextPacking { self: TextOps.type =>
         // re-execute per use. This is block reuse of the survivor rows,
         // not a per-stage corpus copy
         .transform(Pin)
-      packCountsWithSpan(survivors, packSpanFor(spanLeg()))
+      // the chunk span only needs an UPPER bound on survivor doc_id
+      // (packCountsWithSpan output is span-invariant): the session's
+      // memoized max(doc_id) over the raw corpus, a survivor superset
+      packCountsWithSpan(survivors,
+        packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
     },
     Some {
       val v = md5Hex32Sql("'grp-v1:' || source")
@@ -1448,12 +1443,6 @@ private[llm] trait TextPacking { self: TextOps.type =>
   val corpusToShards = QuerySpec(
     "corpus_to_shards",
     (s, d) => {
-      // span bound forked over the RAW corpus (guide §2.6, r20 — the
-      // pipeline_quality_pack rationale): overlaps the gate chain, and
-      // the pack span needs only an upper doc_id bound (span-invariant)
-      val spanLeg = graft.Par.fork(
-        Option(documents(s, d).agg(max(col("doc_id"))).first().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L))
       // NARROW survivor pin (guide §2.3/§8, r20): everything downstream
       // needs only per-doc METADATA — (doc_id, source) for the mixture,
       // n_tokens for packing, the manifest row columns for the manifest
@@ -1474,8 +1463,10 @@ private[llm] trait TextPacking { self: TextOps.type =>
       val selected = surv
         .join(sel.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
         .transform(Pin)
-      val packed = packCountsWithSpan(
-        selected.select("doc_id", "n_tokens"), packSpanFor(spanLeg()))
+      // pack span from an upper doc_id bound (span-invariant): the raw
+      // corpus's memoized max, the pipeline_quality_pack rule
+      val packed = packCountsWithSpan(selected.select("doc_id", "n_tokens"),
+        packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
       selected.select("shard", "doc_id", "ws", "chars", "h")
         .join(packed.select(col("doc_id"), col("bin_id"))
           .hint("shuffle_hash"), Seq("doc_id"))
@@ -1562,11 +1553,6 @@ private[llm] trait TextPacking { self: TextOps.type =>
     *      incremental manifest update. */
   def ctsCorpusState(s: SparkSession, d: String): (DataFrame, DataFrame) =
     graft.Materialize.oncePair(s, s"cts_corpus|$d") {
-      // span bound forked over the raw corpus slice (guide §2.6, r20 —
-      // the corpus_to_shards rationale; span-invariant)
-      val spanLeg = graft.Par.fork(
-        Option(documents(s, d).agg(max(col("doc_id"))).first().get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L))
       val split = Dedup.deltaSplitOf(s, d)
       val corp = documents(s, d).filter(col("doc_id") < split)
       val clean = corpusCleanOf(corp).select("doc_id")
@@ -1586,8 +1572,10 @@ private[llm] trait TextPacking { self: TextOps.type =>
         .join(mixtureSelectOf(surv).hint("shuffle_hash"),
           Seq("doc_id"), "left_semi")
         .transform(Pin)
-      val packed = packCountsWithSpan(
-        selected.select("doc_id", "n_tokens"), packSpanFor(spanLeg()))
+      // pack span from the raw corpus's memoized max (the
+      // corpus_to_shards rule; span-invariant)
+      val packed = packCountsWithSpan(selected.select("doc_id", "n_tokens"),
+        packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
       val survIdx = surv.select("doc_id", "source")
         .join(packed.select("doc_id", "n_tokens", "bin_id")
           .hint("shuffle_hash"), Seq("doc_id"), "left")
@@ -1664,14 +1652,6 @@ private[llm] trait TextPacking { self: TextOps.type =>
     // waiting for a sequential driver call. Materialize's once-semantics
     // hold under the race (MaterializeConcurrencySpec).
     val corpusLeg = graft.Par.fork(ctsCorpusState(s, d))
-    // pack-span bound forked too (guide §2.6, r20): an upper doc_id
-    // bound over the raw corpus (admitted ⊆ shard ⊆ documents) sizes
-    // the append pack's chunk span — span-invariant, so the sizing scan
-    // overlaps the gate chain instead of serializing after the
-    // admitted pin
-    val spanLeg = graft.Par.fork(
-      Option(documents(s, d).agg(max(col("doc_id"))).first().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L))
     val survS = deltaShardSurvivorsOf(s, d)
     val (survIdx, _) = corpusLeg()
     // append-base aggregate forked too: it reads ONLY the stored index,
@@ -1711,9 +1691,12 @@ private[llm] trait TextPacking { self: TextOps.type =>
     // tokens / 2048), one stored-index aggregate (the A10 pattern) —
     // computed on the forked leg above, joined here
     val baseBin = baseBinLeg()
+    // the append pack's chunk span from an upper doc_id bound
+    // (span-invariant): the raw corpus's memoized max, since
+    // admitted ⊆ shard ⊆ documents
     admitted.join(
       packCountsWithSpan(admitted.select("doc_id", "n_tokens"),
-          packSpanFor(spanLeg()))
+          packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
         .select(col("doc_id"), (col("bin_id") + lit(baseBin)).as("bin_id"))
         .hint("shuffle_hash"),
       Seq("doc_id"))

@@ -39,9 +39,9 @@ object Etl {
     // insert keys are offset by max(key), not a constant: a fixed
     // +1000000 collides with genuine customer keys once c_custkey
     // exceeds 1M (sf>=7), silently breaking the one-current-version
-    // invariant. max(key) is sanctioned scalar feedback (A10 pattern)
-    // and keeps the insert range disjoint at every scale factor.
-    val insOff = cur.agg(max(col("key"))).first().getLong(0)
+    // invariant. The session's memoized max(c_custkey) keeps the insert
+    // range disjoint at every scale factor.
+    val insOff = maxOf(s, d, "customer", "c_custkey").getOrElse(0L)
     // staged batch: every key%3 row arrives (key%6 actually changes,
     // the rest are no-ops the merge must NOT version), key%17 rows
     // arrive under a fresh key range (pure inserts)
@@ -169,9 +169,9 @@ object Etl {
         col("o_orderpriority").as("priority"),
         cents(col("o_totalprice")).as("total_cents"),
         lit(1L).as("src"))
-      // insert-key offset derived from max(key) (a fixed +10000000
-      // collides with real o_orderkey at sf>=2); scalar feedback, A10
-      val insOff = base.agg(max(col("key"))).first().getLong(0)
+      // insert-key offset derived from the memoized max(o_orderkey) (a
+      // fixed +10000000 collides with real o_orderkey at sf>=2)
+      val insOff = maxOf(s, d, "orders", "o_orderkey").getOrElse(0L)
       val delta = base.filter(col("key") % 5 === 0)
         .select(col("key"), lit("R").as("status"),
           lit("0-REVISED").as("priority"),

@@ -538,11 +538,10 @@ object Graph {
           .otherwise(expr(s"1 + $h % (k div 2)")).as("parent"),
         col("spend_cents"))
       // parent ≤ k/2 bounds depth at log₂(maxkey), so the doubling
-      // round count derives log-log from one cheap scalar feedback:
-      // 4 rounds at sf0.1 (15k keys), 6 at 10¹¹ — each saved round is a
-      // full closure re-distinct
-      val maxK = Option(customer(s, d).agg(max(col("c_custkey"))).first().get(0))
-        .map(_.toString.toLong).getOrElse(1L)
+      // round count derives log-log from the session's memoized
+      // max(c_custkey): 4 rounds at sf0.1 (15k keys), 6 at 10¹¹ — each
+      // saved round is a full closure re-distinct
+      val maxK = maxOf(s, d, "customer", "c_custkey").getOrElse(1L)
       val depthBound = math.max(2, 64 - java.lang.Long.numberOfLeadingZeros(maxK))
       val rounds = 32 - Integer.numberOfLeadingZeros(depthBound - 1)
       ptrRollup(nodes0, rounds)

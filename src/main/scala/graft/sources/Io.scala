@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.StructType
   *     inferSchema in production — one pass saved, schema drift caught);
   *   - `SaveMode.Overwrite` ≅ drop/recreate+reload
   *     (createStarSchema.R:191-201);
-  *   - JDBC passthrough for row-store sources like the reference's
-  *     SQLite/MySQL (no driver jar ships in this container — the builders
-  *     are thin config wrappers over `spark.read.jdbc`).
+  *   - JDBC for row-store sources like the reference's SQLite/MySQL:
+  *     `jdbc_dim_roundtrip` writes and reads back through
+  *     `spark.read.jdbc` against embedded Derby.
   *
   * Scale notes baked into the writers:
   *   - facts are written partitioned by the denormalized `year` column →
@@ -53,24 +53,6 @@ object Io {
   def writeJsonLines(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).json(path)
 
-  def readJdbc(s: SparkSession, url: String, table: String,
-               props: java.util.Properties = new java.util.Properties()): DataFrame =
-    s.read.jdbc(url, table, props)
-
-  /** Partition-parallel JDBC scan — the scale path for row-store
-    * extraction: numPartitions concurrent range scans on an indexed
-    * numeric column instead of one serial cursor. */
-  def readJdbcPartitioned(s: SparkSession, url: String, table: String,
-                          partitionCol: String, lower: Long, upper: Long,
-                          numPartitions: Int): DataFrame =
-    s.read.jdbc(url, table, partitionCol, lower, upper, numPartitions,
-      new java.util.Properties())
-
-  /** Full-reload dimension write (drop/recreate ≅ Overwrite). Dims are
-    * small: coalesce to a handful of files. */
-  def writeDim(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Report export — the delivery format of the reference's Rmd tables.
     * Single file with header; quotes/escapes handled by the writer (the
     * reference escaped by hand, loadAnalyticsDB.R:192-196). */
@@ -86,12 +68,6 @@ object Io {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("year")
       .parquet(path)
-
-  /** Append sink for incremental loads (the reference's "future
-    * enhancement", README.md:177) — used with `foreachBatch` from the
-    * streaming module for exactly-once-per-batch fact appends. */
-  def appendFacts(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy("year").parquet(path)
 
   /** The other two source formats under the driver gate, same pattern as
     * the parquet/JDBC round-trips: the dim is pushed out through the
@@ -153,8 +129,8 @@ object Io {
   /** S1's row-store half under the driver gate: the reference reads its
     * warehouse straight from SQLite (loadAnalyticsDB.R:537-538). Here the
     * nation dim is pushed through `df.write.jdbc` into embedded Derby
-    * (the one JDBC engine shipped in Spark's jars dir — JdbcSpec covers
-    * the unit-level contract) and read back with a PARTITIONED range
+    * (the one JDBC engine shipped in Spark's jars dir) and read back
+    * with a PARTITIONED range
     * scan: 4 concurrent cursors over the key range, the scale shape for
     * row-store extraction, vs the reference's single serial cursor. The
     * oracle recomputes from the parquet source, so a type-mapping or

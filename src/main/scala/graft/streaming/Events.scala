@@ -1,53 +1,20 @@
 package graft.streaming
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Typed event row for the custom-state sessionizer. */
-case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value_cents: Long)
-
-/** Open-session accumulator kept in GroupState (all epoch-millis — the
-  * state store serializes product encoders directly). */
-case class SessionAcc(start: Long, last: Long, cnt: Long, cents: Long)
-
-/** All of a user's not-yet-finalized sessions. More than one can be open
-  * at once: a later session may start while an earlier one is still
-  * inside the watermark's lateness allowance (a late event could still
-  * extend or bridge it), so sessions are only closed once the watermark
-  * passes their gap window. */
-case class SessionBuf(sessions: Seq[SessionAcc])
-
-/** A closed session emitted by the sessionizer. */
-case class UserSession(user_id: Long, session_start: java.sql.Timestamp,
-    session_end: java.sql.Timestamp, event_cnt: Long,
-    total_value_cents: Long)
 
 /** Structured Streaming surface (SURVEY §2.10).
   *
   * The reference is batch-only (full drop/reload); its README lists
   * incremental/real-time refresh as future work. This module supplies
-  * that capability Spark-natively: the same event-time hourly aggregation
-  * as the batch `event_time_window` query key, expressed as a
+  * that capability Spark-natively: event-time windowed aggregations,
+  * session windows and interval joins, each expressed as a
   * stream-agnostic transform — apply it to `spark.readStream` sources for
   * incremental execution with watermarked state eviction, or to a batch
   * DataFrame for backfill (identical results, one definition).
   */
 object Events {
-
-  /** Hourly tumbling-window counts/sums per event type. Watermark bounds
-    * state: late events beyond 2 hours are dropped instead of growing
-    * executor state forever — the knob that keeps this runnable on an
-    * unbounded stream. */
-  def hourlyByType(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("event_cnt"),
-           sum(cents(col("value"))).as("total_value_cents"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-              col("event_cnt"), col("total_value_cents"))
 
   /** Hourly distinct users per event type — the streaming-cardinality
     * pattern: EXACT streaming distinct needs per-window user sets
@@ -95,18 +62,6 @@ object Events {
            sum(cents(col("value"))).as("total_value_cents"))
       .select(col("w.start").as("window_start"), col("country"),
               col("event_cnt"), col("total_value_cents"))
-
-  /** Exactly-once streaming dedup: drop replayed event_ids inside the
-    * watermark horizon — dedup is on the id ALONE, so a replay whose
-    * timestamp was jittered in transit is still dropped (keying on
-    * (id, ts) would let it through). dropDuplicatesWithinWatermark keeps
-    * one state entry per id and evicts it once the watermark passes its
-    * first-seen ts + delay — bounded state on an unbounded stream. The
-    * at-least-once → exactly-once adapter every ingestion front-end
-    * needs. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Stream-stream interval join (click→purchase attribution): every
     * purchase is paired with each same-user click in the preceding
@@ -168,58 +123,5 @@ object Events {
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
           .as("lag_us"),
         cents(col("value")).as("value_cents"))
-  }
-
-  /** Custom-gap sessionization via flatMapGroupsWithState — the
-    * explicit-state twin of `userSessions` for session semantics the
-    * built-in session_window can't express (e.g. gap rules that depend on
-    * accumulated session content). State is ONE open-session accumulator
-    * per user; an event-time timeout at (last event + gap) closes and
-    * emits the session once the watermark passes it, so state is bounded
-    * by the active-user count, never by history. */
-  def sessionizeCustom(events: Dataset[UserEvent],
-      gapMs: Long): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionBuf, UserSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, evs: Iterator[UserEvent],
-         state: GroupState[SessionBuf]) =>
-          def close(a: SessionAcc) = UserSession(uid,
-            new java.sql.Timestamp(a.start), new java.sql.Timestamp(a.last),
-            a.cnt, a.cents)
-          // ALL not-yet-finalized sessions stay in state: a session may
-          // only be closed once the watermark passes (last + gap) —
-          // closing inline on the first out-of-gap successor would
-          // misattribute a late-but-in-watermark event that belongs to
-          // the earlier session (Spark admits such events; the 2h
-          // watermark is a promise the operator must honor)
-          var sessions = state.getOption.map(_.sessions.toList).getOrElse(Nil)
-          for (e <- evs.toSeq.sortBy(_.ts.getTime)) {
-            val t = e.ts.getTime
-            // merge the event with every session it bridges (it can
-            // connect two sessions whose gap it closes)
-            val (touch, rest) = sessions.partition(
-              a => t >= a.start - gapMs && t <= a.last + gapMs)
-            val merged = touch.foldLeft(SessionAcc(t, t, 1L, e.value_cents)) {
-              (m, a) => SessionAcc(math.min(m.start, a.start),
-                math.max(m.last, a.last), m.cnt + a.cnt, m.cents + a.cents)
-            }
-            sessions = merged :: rest
-          }
-          // finalize every session whose whole gap window is behind the
-          // watermark — nothing can change it anymore
-          val wm = state.getCurrentWatermarkMs()
-          val (done, open) = sessions.partition(_.last + gapMs <= wm)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(SessionBuf(open))
-            // earliest possible finalization of anything still open
-            state.setTimeoutTimestamp(open.map(_.last).min + gapMs)
-          }
-          done.sortBy(_.start).map(close).iterator
-      }
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 
 /** graft.Sources — each parquet source is read once per session. The
-  * contract under test: a second read of a table or a `Materialize`
-  * artifact in one session starts no Spark job and hands back the same
-  * frame, a rewritten path is read again, an ended application's frames
-  * are forgotten, and every session gets its own frame. A single-file
+  * contract under test: a second read of a table, a `Materialize`
+  * artifact or a table's `max(id)` in one session starts no Spark job
+  * and hands back the same value, a rewritten path is read again, an
+  * ended application's frames are forgotten, and every session gets its
+  * own frame. A single-file
   * source above the split floor is scanned from one split copy per
   * application, with the raw rows and schema on every core; a rewritten
   * source is split again, and a multi-file or small source is read as
@@ -144,6 +145,38 @@ class SourcesSpec extends SparkSpec {
     assert(after ne before)
     assert(after.count() == 20L && sumOf(after) == expect)
     assert(Tables.documents(spark, dir) eq after)
+  }
+
+  test("a source's max(id) is one job per session, and a warm call starts none") {
+    val s = spark.newSession()
+    val (bound, cold) = jobsOf(Tables.maxOf(s, sf, "documents", "doc_id"))
+    assert(cold >= 1, "the first call should run the max job")
+    assert(bound == Some(s.read.parquet(s"$sf/documents.parquet")
+      .agg(max(col("doc_id"))).head().getLong(0)))
+    val (again, warm) = jobsOf(Tables.maxOf(s, sf, "documents", "doc_id"))
+    assert(warm == 0 && again == bound, s"a warm call started $warm jobs")
+  }
+
+  test("a rewritten source gives its new max(id)") {
+    val dir = tempDir("sources")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def write(n: Int): Long = {
+      val rows = docs.orderBy("doc_id").limit(n)
+      rows.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      rows.agg(max(col("doc_id"))).head().getLong(0)
+    }
+    val first = write(10)
+    assert(Tables.maxOf(spark, dir, "documents", "doc_id") == Some(first))
+    val second = write(20)
+    assert(second > first)
+    assert(Tables.maxOf(spark, dir, "documents", "doc_id") == Some(second))
+  }
+
+  test("an empty source has no max(id)") {
+    val dir = tempDir("sources")
+    spark.read.parquet(s"$sf/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Tables.maxOf(spark, dir, "documents", "doc_id").isEmpty)
   }
 
   test("an ended application's frames are dropped") {

@@ -25,14 +25,6 @@ class IoSpec extends SparkSpec {
     assert(pruned.count() == fact.filter($"year" === y).count())
   }
 
-  test("overwrite is full-reload idempotent (drop/recreate semantics)") {
-    val out = tempDir("dim_out")
-    val dim = StarSchema.dimLocation(spark, sf)
-    Io.writeDim(dim, out)
-    Io.writeDim(dim, out) // second run must not duplicate
-    assert(spark.read.parquet(out).count() == dim.count())
-  }
-
   test("csv and json round-trip with explicit schema") {
     val dir = tempDir("io_rt")
     // quotes and commas in values exercise the writer's escaping (the
@@ -61,13 +53,5 @@ class IoSpec extends SparkSpec {
     val p = back.filter($"product_key" === 1L)
       .queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") && p.contains("product_key"), p)
-  }
-
-  test("streaming foreachBatch appends facts incrementally") {
-    val out = tempDir("fact_append")
-    val fact = StarSchema.factSales(spark, sf).limit(100)
-    Io.appendFacts(fact, out)
-    Io.appendFacts(fact, out)
-    assert(spark.read.parquet(out).count() == 200)
   }
 }

@@ -14,42 +14,16 @@ case class EvU(ts: Timestamp, user_id: Long, value: Double)
 /** Event with user and type, for the streaming-cardinality test. */
 case class EvT(ts: Timestamp, event_type: String, user_id: Long)
 
-/** Structured Streaming semantics: the hourly aggregation must produce
-  * the same results incrementally (MemoryStream micro-batches) as in one
-  * batch pass — the single-definition batch/stream contract. */
+/** Structured Streaming semantics: each windowed aggregation and join
+  * must produce the same results incrementally (MemoryStream
+  * micro-batches) as in one batch pass — the single-definition
+  * batch/stream contract. */
 class EventsStreamSpec extends SparkSpec {
   lazy val s = spark
   import s.implicits._
 
   private def ev(t: String, ty: String, v: Double) =
     Ev(Timestamp.valueOf(t), ty, v)
-
-  test("streaming hourly agg == batch hourly agg on the same data") {
-    implicit val sctx = spark.sqlContext
-    val data = Seq(
-      ev("2024-01-01 10:05:00", "click", 1.0),
-      ev("2024-01-01 10:55:00", "click", 2.5),
-      ev("2024-01-01 11:10:00", "view", 4.0),
-      ev("2024-01-01 12:01:00", "click", 8.0))
-
-    val stream = MemoryStream[Ev]
-    val q = Events.hourlyByType(stream.toDF())
-      .writeStream.format("memory").queryName("hourly_test")
-      .outputMode("complete").start()
-    try {
-      stream.addData(data.take(2))
-      q.processAllAvailable()
-      stream.addData(data.drop(2))
-      q.processAllAvailable()
-      val streamed = spark.table("hourly_test")
-        .select("window_start", "event_type", "event_cnt", "total_value_cents")
-        .collect().map(_.toSeq).toSet
-      val batch = Events.hourlyByType(data.toDF())
-        .collect().map(_.toSeq).toSet
-      assert(streamed == batch)
-      assert(streamed.size == 3) // 10h click(2), 11h view, 12h click
-    } finally q.stop()
-  }
 
   test("streaming distinct-users sketch == batch on the same data, repeats collapse") {
     implicit val sctx = spark.sqlContext
@@ -106,87 +80,6 @@ class EventsStreamSpec extends SparkSpec {
       assert(streamed == batch)
       // 10h FRANCE, 10h KENYA, 11h FRANCE; user 99 enriches nothing
       assert(streamed.size == 3)
-    } finally q.stop()
-  }
-
-  test("foreachBatch + appendFacts: incremental partitioned fact maintenance") {
-    implicit val sctx = spark.sqlContext
-    val out = tempDir("stream_fact")
-    val stream = MemoryStream[Ev]
-    val q = stream.toDF()
-      .withColumn("year", year($"ts"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.sources.Io.appendFacts(batch, out)
-      }
-      .start()
-    try {
-      stream.addData(ev("2024-01-01 10:00:00", "click", 1.0))
-      q.processAllAvailable()
-      stream.addData(ev("2025-06-01 10:00:00", "view", 2.0))
-      q.processAllAvailable()
-      val back = spark.read.parquet(out)
-      assert(back.count() == 2)
-      // partitioned-by-year layout → year predicates prune directories
-      assert(back.filter($"year" === 2025).count() == 1)
-      assert(new java.io.File(s"$out/year=2024").exists())
-      assert(new java.io.File(s"$out/year=2025").exists())
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions by gap + timeout") {
-    implicit val sctx = spark.sqlContext
-    def ue(uid: Long, t: String, c: Long) =
-      UserEvent(uid, Timestamp.valueOf(t), c)
-    val stream = MemoryStream[UserEvent]
-    val q = Events.sessionizeCustom(stream.toDS(), 30L * 60 * 1000)
-      .writeStream.format("memory").queryName("custom_sessions")
-      .outputMode("append").start()
-    try {
-      stream.addData(ue(1, "2024-01-01 10:00:00", 100),
-        ue(1, "2024-01-01 10:10:00", 50), ue(2, "2024-01-01 10:05:00", 7))
-      q.processAllAvailable()
-      // same batch or later: the 11:30 event exceeds the gap → closes
-      // user 1's first session inline
-      stream.addData(ue(1, "2024-01-01 11:30:00", 1))
-      q.processAllAvailable()
-      // watermark pushers: 20:00 moves the watermark to 18:00 (2h wm),
-      // past every earlier session's (last + gap) timeout; the second
-      // event triggers the micro-batch in which those timeouts fire
-      stream.addData(ue(99, "2024-01-01 20:00:00", 0))
-      q.processAllAvailable()
-      stream.addData(ue(99, "2024-01-01 20:01:00", 0))
-      q.processAllAvailable()
-      val got = spark.table("custom_sessions")
-        .select("user_id", "session_start", "event_cnt", "total_value_cents")
-        .collect().map(_.toSeq).toSet
-      val exp = Set(
-        Seq(1L, Timestamp.valueOf("2024-01-01 10:00:00"), 2L, 150L),
-        Seq(1L, Timestamp.valueOf("2024-01-01 11:30:00"), 1L, 1L),
-        Seq(2L, Timestamp.valueOf("2024-01-01 10:05:00"), 1L, 7L))
-      assert(got == exp) // user 99's session is still open → not emitted
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops replayed event ids across micro-batches") {
-    implicit val sctx = spark.sqlContext
-    val stream = MemoryStream[(Long, Timestamp, Double)]
-    val df = stream.toDF().toDF("event_id", "ts", "value")
-    val q = Events.dedupEvents(df)
-      .writeStream.format("memory").queryName("dedup_events")
-      .outputMode("append").start()
-    try {
-      val t = Timestamp.valueOf("2024-01-01 10:00:00")
-      stream.addData((1L, t, 1.0), (2L, t, 2.0))
-      q.processAllAvailable()
-      // 2 is a replay whose timestamp was JITTERED in transit — id-only
-      // dedup (dropDuplicatesWithinWatermark) must still drop it; a
-      // (id, ts) key would let it through as a phantom duplicate
-      val tJit = Timestamp.valueOf("2024-01-01 10:00:07")
-      stream.addData((2L, tJit, 2.0), (3L, t, 3.0))
-      q.processAllAvailable()
-      assert(spark.table("dedup_events").select("event_id")
-        .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     } finally q.stop()
   }
 
