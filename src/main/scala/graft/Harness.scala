@@ -8,15 +8,23 @@ import org.apache.spark.sql.SparkSession
   * between keys is [[Pin.sweep]]. */
 object Harness {
 
+  /** The one place a session is built (`OneModuleSpec`): a local
+    * master with `cores` shuffle partitions, UTC, UI off and the
+    * [[SmallSort]] rule, so the mains, the probes and the specs plan
+    * alike. */
+  def builder(master: String, cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectQueryStagePrepRule(_ => SmallSort))
+
   /** Local session at SPARK_GRAFT_CPUS (default 32, the driver's target
     * topology), shuffle partitions matched to cores, UI off. */
   def session(extra: (String, String)*): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = builder(s"local[$cpus]", cpus.toInt)
       // whole-stage-codegen class cache (STATIC conf — must land at
       // session build). Default 100 entries guarantees LRU thrash on a
       // 150-key suite (~2,200 generated classes per full pass measured

@@ -26,7 +26,10 @@ import org.apache.spark.sql.graft.bridge
   * and append base), where materializing now is what
   * overlaps the two legs' jobs (a lazy copy would defer its jobs until
   * after the join). The copy's stats are the optimizer's estimate, not
-  * measured sizes.
+  * measured sizes. [[SmallSort]] does not fold the final sort of a
+  * frame first planned by the pin into one task, so such a copy keeps
+  * the sort's partitions; a frame planned before (by `explain` or an
+  * action) keeps the plan it already has.
   */
 object Pin extends (DataFrame => DataFrame) {
   /** `df`, stored once for every later reader; its first consumer
@@ -54,7 +57,7 @@ object Pin extends (DataFrame => DataFrame) {
     }
   }
 
-  private def pin(df: DataFrame, eager: Boolean): DataFrame = {
+  private def pin(df: DataFrame, eager: Boolean): DataFrame = SmallSort.keepingPartitions {
     val s = df.sparkSession
     val d = withInjectedFault(df)
     s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Failure-recovery demonstration for the reliable-checkpoint mode
   * (RECOVERY.json): PinSpec proves the checkpoint files exist; this
@@ -22,12 +21,8 @@ import org.apache.spark.sql.SparkSession
 object RecoveryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8,2]") // 2 task attempts: retries on, like a cluster
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 2 task attempts: retries on, like a cluster
+    val spark = Harness.builder("local[8,2]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.graft.checkpointDir",
       Workspace.dir(spark, "recovery", "ckpt"))

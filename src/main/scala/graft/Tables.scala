@@ -27,7 +27,12 @@ import org.apache.spark.sql.types._
   *     values are identical. Integers cannot render two ways.
   *   - computed integers are always `LongType` (DuckDB's default integer
   *     width, so result schemas line up);
-  *   - every query result ends with a total-order `orderBy`.
+  *   - every query result ends with a total-order `orderBy`. When its
+  *     input fits the one partition AQE would coalesce it into and the
+  *     final stage reads no split source, [[SmallSort]] runs that sort
+  *     in one task over a no-shuffle coalesce instead of a range
+  *     exchange (no sampling job); otherwise the range exchange stays.
+  *     Either way the rows and their order are the same.
   */
 object Tables {
 

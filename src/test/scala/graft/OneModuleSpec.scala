@@ -4,22 +4,25 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Decisions made in one module stay there: only `Pin` (and the
-  * `bridge` forwarding file) pins a frame, and only `Workspace` creates
-  * a temp dir. A new call site elsewhere fails here, and so does a new
+  * `bridge` forwarding file) pins a frame, only `Workspace` creates
+  * a temp dir, and only `Harness` builds a session, in `src/test` too.
+  * A new call site elsewhere fails here, and so does a new
   * `SPARK_GRAFT_*` env knob or `spark.graft.*` conf. */
 class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  private lazy val files: Seq[Path] = {
-    val st = Files.walk(Paths.get("src/main"))
+  private def scalaFiles(root: String): Seq[Path] = {
+    val st = Files.walk(Paths.get(root))
     val fs =
       try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally st.close()
-    assert(fs.size > 40, s"src/main not found from ${Paths.get("").toAbsolutePath}")
+    assert(fs.size > 40, s"$root not found from ${Paths.get("").toAbsolutePath}")
     fs
   }
 
-  private def offenders(allowed: Set[String], calls: String*): Seq[String] =
-    files.filterNot(f => allowed(f.getFileName.toString)).flatMap { f =>
+  private lazy val files: Seq[Path] = scalaFiles("src/main")
+
+  private def offenders(in: Seq[Path], allowed: Set[String], calls: String*): Seq[String] =
+    in.filterNot(f => allowed(f.getFileName.toString)).flatMap { f =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
         case (line, i) if calls.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
       }
@@ -31,12 +34,18 @@ class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
       .map(_.stripSuffix(".")).toSet
 
   test("only Pin calls localCheckpoint or checkpoint") {
-    val hits = offenders(Set("Pin.scala", "bridge.scala"), "localCheckpoint(", ".checkpoint(")
+    val hits = offenders(files, Set("Pin.scala", "bridge.scala"), "localCheckpoint(", ".checkpoint(")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("only Workspace creates a temp dir") {
-    val hits = offenders(Set("Workspace.scala"), "createTempDirectory")
+    val hits = offenders(files, Set("Workspace.scala"), "createTempDirectory")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("every session is built by Harness.builder, so specs plan as the mains do") {
+    val hits = offenders(files ++ scalaFiles("src/test"),
+      Set("Harness.scala", "OneModuleSpec.scala"), "SparkSession.builder")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -219,8 +219,10 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastExchange"),
       s"corpus-derived broadcast in static plan:\n$p")
     // exactly two hash exchanges touch gram/position rows: hash(h) for
-    // the cross-doc window, hash(doc_id) for gaps-and-islands (the
-    // final range exchange is the contracted ORDER BY). Exchanges are
+    // the cross-doc window, hash(doc_id) for gaps-and-islands. The
+    // initial plan also ends in the contracted ORDER BY's range
+    // exchange (an explode below it makes SmallSort decline), which AQE
+    // drops once the stages below report a small result. Exchanges are
     // inserted by EnsureRequirements, so count on the executed plan.
     val ep = SparkEntry.queries("substring_dedup")(spark, sf)
       .queryExecution.executedPlan.toString

@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerApplicationEnd
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 
@@ -16,23 +16,6 @@ import org.apache.spark.sql.graft.bridge
   * source is split again, and a multi-file or small source is read as
   * it is. */
 class SourcesSpec extends SparkSpec {
-
-  /** `body`'s result and the Spark jobs it started, counted by a
-    * listener between two drains of the listener bus. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    bridge.waitListenerBusEmpty(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      bridge.waitListenerBusEmpty(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def sumOf(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(sum(col("doc_id"))).head().getLong(0)

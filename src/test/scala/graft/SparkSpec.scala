@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * deletes it when the session ends. */
   def tempDir(kind: String): String =
     Workspace.dir(spark, kind, s"spec-${SparkSpec.dirs.incrementAndGet()}")
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener between two drains of the listener bus. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    bridge.waitListenerBusEmpty(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      bridge.waitListenerBusEmpty(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
@@ -24,12 +42,8 @@ object SparkSpec {
     // conf, needed before the session exists, so it is deleted by its
     // own listener when the session's application ends
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = Harness.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.addSparkListener(new SparkListener {

@@ -20,8 +20,12 @@ every end-to-end metric of `BENCHMARK.json` it prints the parent's and
 the change's median [quartiles], the change's relative move, the pairs
 the change won (strictly better in the metric's direction) and the IQR
 test: whether the medians are further apart than the parent's
-interquartile range. `--json FILE` also writes every run's metrics.
-Nothing is written under the repo.
+interquartile range. Then, per key, it prints each side's median over
+the pairs of the key's median wall time in a run's measured passes
+(read from the `perfbench/out/<workload>-seed<n>-trace0-raw.json` each
+run writes), the change's relative move and the pairs it won.
+`--json FILE` also writes every run's metrics. Nothing is written under
+the repo.
 
 `--swap-after N` makes each side run from the other's dir from pair N+1
 on. In an A/A set (`--parent HEAD --change HEAD`) a lean that follows the
@@ -32,6 +36,7 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -80,9 +85,21 @@ def run(side, workload, seed, seconds):
         sys.stderr.write(r.stderr[-3000:])
         raise SystemExit(f"{side.name} {workload} seed {seed} failed")
     out = json.loads(lines[-1])
+    raw = side / "perfbench" / "out" / f"{workload}-seed{seed}-trace0-raw.json"
     return {"seed": seed, "wall_s": round(time.time() - t0, 1),
             "correct": out["correct"], "failed": out["failed"],
-            "metrics": {k: v["value"] for k, v in out["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in out["metrics"].items()},
+            "keys": key_medians(json.loads(raw.read_text()))}
+
+
+def key_medians(raw):
+    """Each key's median wall seconds over a run's measured passes."""
+    measured = {p["pass"] for p in raw["passes"]}
+    walls = {}
+    for r in raw["keys"]:
+        if r["pass"] in measured and r["ok"]:
+            walls.setdefault(r["key"], []).append(r["wall_s"])
+    return {k: statistics.median(v) for k, v in walls.items()}
 
 
 def quartiles(xs):
@@ -114,6 +131,27 @@ def compare(pairs, spec):
             "wins": wins, "n": len(pairs),
             "iqr_test": gap > qa[2] - qa[0]})
     return rows
+
+
+def compare_keys(pairs):
+    """Per key: each side's median over the pairs, the move, the wins."""
+    rows = []
+    for k in sorted(pairs[0]["parent"]["keys"]):
+        both = [(p["parent"]["keys"][k], p["change"]["keys"][k]) for p in pairs
+                if k in p["parent"]["keys"] and k in p["change"]["keys"]]
+        a = statistics.median(x for x, _ in both)
+        b = statistics.median(y for _, y in both)
+        rows.append({"key": k, "parent_s": a, "change_s": b,
+                     "rel": (b / a - 1) if a else 0.0,
+                     "wins": sum(y < x for x, y in both), "n": len(both)})
+    return rows
+
+
+def show_keys(workload, rows):
+    print(f"\n{workload} per key: median wall s over the pairs, parent -> change")
+    for r in rows:
+        print(f"  {r['key']:<24} {r['parent_s']:.4f} -> {r['change_s']:.4f} s  "
+              f"{r['rel']:+.1%}  won {r['wins']}/{r['n']}")
 
 
 def show(workload, rows):
@@ -172,9 +210,10 @@ def main():
             print(f"{w} pair {i + 1}/{a.pairs}: pass_s "
                   f"{p['parent']['metrics']['pass_s']:.3f} -> "
                   f"{p['change']['metrics']['pass_s']:.3f}", file=sys.stderr)
-        rows = compare(pairs, spec)
-        report["workloads"][w] = {"pairs": pairs, "compare": rows}
+        rows, keys = compare(pairs, spec), compare_keys(pairs)
+        report["workloads"][w] = {"pairs": pairs, "compare": rows, "keys": keys}
         show(w, rows)
+        show_keys(w, keys)
     if a.json:
         Path(a.json).write_text(json.dumps(report, indent=1))
 
