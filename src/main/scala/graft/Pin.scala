@@ -26,10 +26,9 @@ import org.apache.spark.sql.graft.bridge
   * and append base), where materializing now is what
   * overlaps the two legs' jobs (a lazy copy would defer its jobs until
   * after the join). The copy's stats are the optimizer's estimate, not
-  * measured sizes. [[SmallSort]] does not fold the final sort of a
-  * frame first planned by the pin into one task, so such a copy keeps
-  * the sort's partitions; a frame planned before (by `explain` or an
-  * action) keeps the plan it already has.
+  * measured sizes. No caller pins a frame that ends in `orderBy`:
+  * [[SmallSort]] would run such a frame's small sort in one task, so
+  * its copy would hold one partition.
   */
 object Pin extends (DataFrame => DataFrame) {
   /** `df`, stored once for every later reader; its first consumer
@@ -57,7 +56,7 @@ object Pin extends (DataFrame => DataFrame) {
     }
   }
 
-  private def pin(df: DataFrame, eager: Boolean): DataFrame = SmallSort.keepingPartitions {
+  private def pin(df: DataFrame, eager: Boolean): DataFrame = {
     val s = df.sparkSession
     val d = withInjectedFault(df)
     s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {

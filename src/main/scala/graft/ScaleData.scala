@@ -66,7 +66,6 @@ object ScaleData {
       "documents" -> Tables.documents(spark, sfDir),
       "embeddings" -> Tables.embeddings(spark, sfDir),
       "events" -> Tables.events(spark, sfDir))
-    val byName = tables.toMap
     // one stride per key family: max+1 over the base domain, so replica
     // id ranges can never collide whatever the base corpus size
     val strides: Map[String, Long] = familyDomain.map {

@@ -30,21 +30,17 @@ import org.apache.spark.sql.internal.SQLConf
   *     (`scan_project` and five text keys over `documents`, by 3-67%).
   *
   * Everything else stays as it is: sorts below the root (a window or
-  * join above a one-task sort would run in one task too), a `Generate`
-  * between the sort and its nearest scan or materialized stage (an
-  * explode's estimate undercounts), and a frame a [[Pin]] copies when
-  * its plan is first built inside the pin ([[keepingPartitions]]).
+  * join above a one-task sort would run in one task too), and a
+  * `Generate` between the sort and its nearest scan or materialized
+  * stage (an explode's estimate undercounts).
   *
   * Registered on every session by [[Harness.builder]]; clones and
   * `newSession`s of that session keep it. The bounds are read from the
   * conf of the session running the query. */
 object SmallSort extends Rule[SparkPlan] {
 
-  def apply(plan: SparkPlan): SparkPlan =
-    if (declining.get) plan else atRoot(plan)
-
-  private def atRoot(plan: SparkPlan): SparkPlan = plan match {
-    case p: ProjectExec => p.withNewChildren(Seq(atRoot(p.child)))
+  def apply(plan: SparkPlan): SparkPlan = plan match {
+    case p: ProjectExec => p.withNewChildren(Seq(apply(p.child)))
     case s @ SortExec(_, true, e: ShuffleExchangeExec, _)
         if e.shuffleOrigin == ENSURE_REQUIREMENTS &&
           e.outputPartitioning.isInstanceOf[RangePartitioning] &&
@@ -77,19 +73,5 @@ object SmallSort extends Rule[SparkPlan] {
     case _: LocalTableScanExec => true
     case _: LeafExecNode => !inTask
     case _ => p.children.forall(oneTaskInput(_, inTask))
-  }
-
-  private val declining = ThreadLocal.withInitial[java.lang.Boolean](() => false)
-
-  /** `body` with the rule off on this thread: a `Pin` plans and runs its
-    * frame's stages inside the checkpoint call, and its copy is read by
-    * later plans, which should see the sort's partitions. It holds only
-    * for a frame whose AQE plan is first built here: one already planned
-    * (by `explain` or an earlier action) keeps the sort it was given.
-    * No `Pin` call in `src/main` pins a frame ending in `orderBy`. */
-  def keepingPartitions[A](body: => A): A = {
-    val was = declining.get
-    declining.set(true)
-    try body finally declining.set(was)
   }
 }

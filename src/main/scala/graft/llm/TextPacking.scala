@@ -2,12 +2,13 @@ package graft.llm
 
 import graft.Tables._
 import graft.{Pin, QuerySpec}
+import graft.ops.GlobalRank
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** TextOps seam 2 — PACKING and SCHEDULING: two-level prefix-sum
-  * sequence packing, overlapping-window chunking, the deficit-scheduler
+/** TextOps seam 2 — PACKING and SCHEDULING: prefix-sum sequence
+  * packing, overlapping-window chunking, the deficit-scheduler
   * source interleave, span corruption, the BPE trainer inner loop, and
   * the end-to-end pipeline_quality_pack composition.
   *
@@ -20,20 +21,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * in doc_id order, gets its stream start position; bin id and offset
     * are pure arithmetic on that prefix sum.
     *
-    * The prefix sum is computed SCALABLY — not with one global
-    * unpartitioned window (a single-reducer sort at 100 TB) but with the
-    * classic two-level scan: (1) per-chunk token totals, where the chunk
-    * span is DERIVED from the corpus key range so the chunk count is
-    * genuinely config-bounded (≤ 64k chunks at ANY corpus size — the
-    * derivation is one cheap max(doc_id) scalar feedback), (2) a global
-    * window over the chunk-totals table — ≤ 64k rows by construction,
-    * so the single-partition sort is a fixed-size step, not a
-    * corpus-proportional one, (3) join the offsets back (shuffle_hash
-    * on the static plan — the offsets ride the SAME hashpartitioning
-    * (chunk) the intra-chunk window needs anyway, and AQE is free to
-    * demote the bounded side to a broadcast at runtime) and run the
-    * intra-chunk window PARTITIONED by chunk. The oracle states the
-    * same semantics as the naive single global window. */
+    * The prefix sum is [[graft.ops.GlobalRank.prefix]] with the token
+    * count as weight and doc_id chunks as cells, never one global
+    * unpartitioned window (a single-reducer sort at 100 TB). The chunk
+    * span is DERIVED from the corpus key range (one cheap max(doc_id)
+    * scalar feedback), so there are ≤ 64k chunks at ANY corpus size.
+    * The oracle states the same semantics as the naive single global
+    * window. */
   val sequencePack = QuerySpec(
     "sequence_pack",
     (s, d) => packOf(documents(s, d)),
@@ -71,8 +65,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
 
   /** [[packOf]] over a precomputed (doc_id, n_tokens) frame — the
     * tokenizer-agnostic core, so bpe_sequence_pack can feed BPE token
-    * counts through the identical two-level prefix-sum machinery
-    * (Catalyst collapses the extra projection, so packOf's plan is
+    * counts through the identical prefix sum (Catalyst collapses the extra projection, so packOf's plan is
     * unchanged). */
   def packCountsOf(counts: DataFrame): DataFrame = {
     // one cheap max(doc_id) scalar feedback (the A10 pattern) sizes the
@@ -93,24 +86,8 @@ private[llm] trait TextPacking { self: TextOps.type =>
     val binTokens = 2048L
     val toks = counts.select(col("doc_id"), col("n_tokens"),
       expr(s"doc_id div $chunkSpan").as("chunk"))
-    val chunkTotals = toks.groupBy("chunk")
-      .agg(sum(col("n_tokens")).as("chunk_tokens"))
-    val wChunks = Window.orderBy("chunk")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val chunkOffsets = chunkTotals
-      .withColumn("chunk_offset",
-        coalesce(sum(col("chunk_tokens")).over(wChunks), lit(0L)))
-      .select("chunk", "chunk_offset")
-    val wInChunk = Window.partitionBy("chunk").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // shuffle_hash, not broadcast: the offsets are corpus-DERIVED (even
-    // if config-BOUNDED) — the static plan keeps the
-    // never-broadcast-corpus-derived rule, both sides already hash by
-    // chunk (the window needs that partitioning anyway), and AQE may
-    // still demote the ≤64k-row side to a broadcast at runtime
-    toks.join(chunkOffsets.hint("shuffle_hash"), "chunk")
-      .withColumn("start_pos", col("chunk_offset") +
-        coalesce(sum(col("n_tokens")).over(wInChunk), lit(0L)))
+    GlobalRank.prefix(toks, Nil, Seq("chunk"), Seq("doc_id"), "start_pos",
+        weight = Some(col("n_tokens")))
       .select(col("doc_id"), col("n_tokens"), col("start_pos"),
         expr(s"start_pos div $binTokens").as("bin_id"),
         (col("start_pos") % binTokens).as("bin_offset"))
@@ -130,39 +107,21 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * property data loaders want so one shard never serves a run of
     * adjacent-position docs).
     *
-    * The rank is computed with the SAME two-level scan as
-    * [[sequencePack]], not `row_number` over one global window (a
-    * single-reducer sort of the whole corpus at 100 TB): md5 keys are
-    * uniform by construction, so their first two hex digits split the
-    * corpus into 256 even buckets — (1) per-bucket counts, (2) a global
-    * prefix window over the 256-row bucket table (fixed-size step at
-    * ANY corpus size), (3) offsets joined back and the intra-bucket
-    * rank windowed PARTITIONED by bucket. Lexicographic order on the
-    * full key is consistent with prefix-bucket order, so the two-level
-    * rank equals the global rank exactly — the oracle states exactly
-    * that global rank (in window-free self-join form, the
-    * sequence_pack DuckDB-flake guard). */
+    * The rank is [[graft.ops.GlobalRank.prefix]], not `row_number`
+    * over one global window (a single-reducer sort of the whole corpus
+    * at 100 TB): md5 keys are uniform by construction, so their first
+    * two hex digits split the corpus into 256 even cells, and
+    * lexicographic order on the full key is consistent with the
+    * prefix's, so the rank equals the global rank exactly — the oracle
+    * states exactly that global rank (in window-free self-join form,
+    * the sequence_pack DuckDB-flake guard). */
   val globalShuffle = QuerySpec(
     "global_shuffle",
     (s, d) => {
       val keyed = documents(s, d).select(col("doc_id"),
         md5(concat(lit("epoch:1:"), col("doc_id").cast("string"))).as("k"))
         .withColumn("bucket", substring(col("k"), 1, 2))
-      val bucketCounts = keyed.groupBy("bucket")
-        .agg(count(lit(1)).as("n"))
-      val wBuckets = Window.orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val bucketOffsets = bucketCounts
-        .withColumn("off", coalesce(sum(col("n")).over(wBuckets), lit(0L)))
-        .select("bucket", "off")
-      val wInBucket = Window.partitionBy("bucket").orderBy("k", "doc_id")
-      // shuffle_hash, not broadcast: the 256-row offsets table is
-      // corpus-derived (the never-statically-broadcast rule); both
-      // sides already hash by bucket for the window, and AQE may still
-      // demote the bounded side at runtime
-      keyed.join(bucketOffsets.hint("shuffle_hash"), "bucket")
-        .withColumn("pos",
-          col("off") + row_number().over(wInBucket) - lit(1L))
+      GlobalRank.prefix(keyed, Nil, Seq("bucket"), Seq("k", "doc_id"), "pos")
         .select(col("doc_id"), col("pos"),
           (col("pos") % 32).as("shard"))
         .orderBy("doc_id")
@@ -224,16 +183,12 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * ANY source string, no ANSI cast hazard).
     *
     * Scale: per-source ranks ride partitioned windows, and the GLOBAL
-    * schedule position is two-level (the sequence_pack scan, NOT a
+    * schedule position is [[graft.ops.GlobalRank.prefix]] (NOT a
     * row_number over an unpartitioned window — that plans
     * Exchange SinglePartition and funnels every document through one
-    * task): chunk = virtual-time band whose WIDTH is derived from the
-    * corpus (one cheap max-source-size scalar feedback) so the chunk
-    * count is ≤ 64k at any corpus size, per-chunk counts take a global
-    * window over that config-bounded table, offsets join back
-    * shuffle_hash (the chunk partitioning is needed by the local-rank
-    * window anyway; AQE may demote the bounded side to a broadcast at
-    * runtime), local rank is chunk-partitioned. */
+    * task) over chunks = virtual-time bands whose WIDTH is derived from
+    * the corpus (one cheap max-source-size scalar feedback), so there
+    * are ≤ 64k chunks at any corpus size. */
   val sourceInterleave = QuerySpec(
     "source_interleave",
     (s, d) => interleaveOf(documents(s, d)),
@@ -312,31 +267,20 @@ private[llm] trait TextPacking { self: TextOps.type =>
       .withColumn("priority",
         expr("(rank_in_source * 1000000) div weight_milli"))
       .withColumn("chunk", expr(s"priority div $band"))
-    val chunkOffsets = prio.groupBy("chunk")
-      .agg(count(lit(1)).as("n"))
-      .withColumn("chunk_offset",
-        coalesce(sum(col("n")).over(Window.orderBy("chunk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("chunk", "chunk_offset")
-    val inChunk = Window.partitionBy("chunk")
-      .orderBy("priority", "source", "doc_id")
-    // shuffle_hash, not broadcast: corpus-derived (if config-bounded)
-    // offsets follow the same static-plan rule as packOf — see there
-    prio.join(chunkOffsets.hint("shuffle_hash"), "chunk")
-      .withColumn("pos",
-        col("chunk_offset") + row_number().over(inChunk).cast("long"))
+    GlobalRank.prefix(prio, Nil, Seq("chunk"),
+        Seq("priority", "source", "doc_id"), "before")
+      .withColumn("pos", col("before") + 1L)
       .select("pos", "doc_id", "source", "weight_milli", "rank_in_source",
         "priority")
       .orderBy("pos")
   }
 
-  /** Two-level md5-bucket rank: for a frame carrying `k` (an md5 hex
-    * key) and `idCol`, assigns 0-based `rnk` ordered by (orderCols...,
-    * bkt, k, idCol), restarting at 0 per distinct resetCols value. Rank
-    * = per-cell ROW_NUMBER + prefix-summed cell offsets, where a cell
-    * is (resetCols ++ orderCols ++ bkt) — the offset window runs over
-    * the ≤ |order-values|·256-row cell table (config-bounded), never
-    * the corpus, and the offsets join back shuffle_hash. ONE definition
+  /** md5-bucket rank: for a frame carrying `k` (an md5 hex key) and
+    * `idCol`, assigns 0-based `rnk` ordered by (orderCols..., bkt, k,
+    * idCol), restarting at 0 per distinct resetCols value — a
+    * [[graft.ops.GlobalRank.prefix]] whose cells are (orderCols ++ bkt),
+    * bkt the key's first two hex digits, so the cell table holds
+    * ≤ |order-values|·256 rows per reset group. ONE definition
     * (with [[bucketRankSql]]) shared by repeat_upsample (reset per
     * source) and curriculum_schedule (global, band-major) — the
     * global_shuffle rank shape, generalized. */
@@ -348,22 +292,8 @@ private[llm] trait TextPacking { self: TextOps.type =>
     // or curriculum's entire banding subplan) once per branch.
     val keyed = df.withColumn("bkt", substring(col("k"), 1, 2))
       .transform(Pin)
-    val cellCols = resetCols ++ orderCols :+ "bkt"
-    val cells = keyed.groupBy(cellCols.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-    val cellOrder = (orderCols :+ "bkt").map(col)
-    val wCells = (if (resetCols.isEmpty) Window.orderBy(cellOrder: _*)
-                  else Window.partitionBy(resetCols.map(col): _*)
-                    .orderBy(cellOrder: _*))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = cells
-      .withColumn("off", coalesce(sum(col("n")).over(wCells), lit(0L)))
-      .select(cellCols.map(col) :+ col("off"): _*)
-    val wIn = Window.partitionBy(cellCols.map(col): _*)
-      .orderBy(col("k"), col(idCol))
-    keyed.join(offsets.hint("shuffle_hash"), cellCols)
-      .withColumn("rnk",
-        col("off") + row_number().over(wIn).cast("long") - 1L)
+    GlobalRank.prefix(keyed, resetCols, orderCols :+ "bkt",
+      Seq("k", idCol), "rnk")
   }
 
   /** DuckDB twin of [[bucketRankOf]]: the bcnt/boff/brnk CTE chain over
@@ -546,9 +476,9 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * uncapped demand U over C docs: every doc gets U div C copies and
     * the U mod C lowest-md5-ranked docs get one more, so Σcopies == U
     * and the grand total is EXACTLY the budget. The extra-copy pick is
-    * a two-level rank WITHIN source (per-(source, md5-prefix-bucket)
-    * row_number + bucket offsets off a per-source ≤256-row window) — a
-    * hot source never becomes one giant window partition.
+    * [[bucketRankOf]] reset per source (a [[graft.ops.GlobalRank.prefix]]
+    * over per-source ≤256-row cell tables) — a hot source never becomes
+    * one giant window partition.
     *
     * Scale shape: one per-source count (shared apportionment stage),
     * one corpus projection + bucket rank, shuffle_hash joins for the
@@ -1074,7 +1004,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * spread; grouping by length bucket (n_tokens div 16) first bounds
     * intra-batch spread to the bucket width, which is the standard
     * dynamic-batching trick (fairseq/HF group_by_length). Batch
-    * assignment is deterministic: the two-level bucketRankOf rank
+    * assignment is deterministic: the bucketRankOf rank
     * (reset per len_bucket, ordered by n_tokens then md5 cell — no
     * corpus-sized window partition even when one bucket holds the whole
     * corpus), cut into fixed batches of 16; a bucket's trailing partial
@@ -1152,9 +1082,9 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * −1 sentinel bucket is that key's own audit concern).
     *
     * Scale shape: leg (a) is one map-side-combinable SUM; leg (b) is
-    * the shipped bucketRankOf machinery (two-level rank, no
-    * corpus-sized window); leg (c) derives the doc_id-order rank from
-    * packCountsOf over unit counts (the same two-level prefix scan) and
+    * the shipped bucketRankOf rank (no corpus-sized window); leg (c)
+    * derives the doc_id-order rank from packCountsOf over unit counts
+    * (the same [[graft.ops.GlobalRank.prefix]]) and
     * joins token counts back shuffle_hash on doc_id. Each leg ends in a
     * ≤|batches|-row aggregate; the union is three 1-row frames. */
   val packingEfficiency = QuerySpec(

@@ -592,14 +592,12 @@ private[llm] trait TextScoring { self: TextOps.type =>
     * then band 3, and WITHIN a band the order is a deterministic md5
     * shuffle (a sorted-by-quality curriculum inside a band would
     * correlate adjacent batches; the shuffle decorrelates them). The
-    * position is a two-level rank over (band, md5-prefix-bucket) cells:
-    * cell counts + a ≤3·256-row offset window (config-bounded, the
-    * sanctioned unpartitioned-window class) + per-cell row_number — no
-    * corpus-wide sort anywhere.
+    * position is [[bucketRankOf]] over (band, md5-prefix-bucket) cells,
+    * a [[graft.ops.GlobalRank.prefix]] whose offset window runs over a
+    * ≤3·256-row table — no corpus-wide sort anywhere.
     *
     * Scale shape: banding is the shared histogram stage; ranking is one
-    * shuffle to the (band, bucket) cells; offsets join back
-    * shuffle_hash (corpus-derived, never static-broadcast). */
+    * shuffle to the (band, bucket) cells. */
   val curriculumSchedule = QuerySpec(
     "curriculum_schedule",
     (s, d) => {

@@ -262,11 +262,10 @@ object Behavior {
     * Scale shape: one corpus shuffle (the per-customer aggregate); the
     * anchor date derives from the pinned per-customer frame (no second
     * fact scan) and broadcasts as a 1-row total. The three quartile
-    * bands are EXACT ntile(4) semantics computed scale-safely via
-    * [[GlobalRank.ntileBanded]] (range buckets + partitioned windows —
-    * no unpartitioned corpus window anywhere in the plan); the oracle
-    * mirrors each rank with the generated two-level prefix-sum stack,
-    * the same construction. */
+    * bands are EXACT ntile(4) semantics from
+    * [[GlobalRank.ntileBanded]], with no unpartitioned corpus window
+    * anywhere in the plan; the oracle states the same construction per
+    * metric ([[quartileCte]]). */
   val rfmSegmentation = QuerySpec(
     "rfm_segmentation",
     (s, d) => {
@@ -288,48 +287,17 @@ object Behavior {
       val base = rfm0.crossJoin(broadcast(anchor))
         .withColumn("r_days",
           datediff(col("a"), col("last_order")).cast(LongType))
-      // two-level banded ranks (r20 — VERDICT r19 next-round 3): each
-      // ntile(4) previously ran over an UNPARTITIONED window — three
-      // corpus-sized single-task sorts of the customer frame. The
-      // banded construction (GlobalRank.ntileBanded's range buckets +
-      // partitioned windows + config-bounded offset table — the
-      // quartileCte shape this key's oracle already states) computes
-      // the identical band, and here all THREE metrics ride ONE stack:
-      // the metrics unpivot to (o_custkey, mname, v) rows and every
-      // stage partitions by (mname, bucket) — one bucket aggregate, one
-      // offset window over the ≤3·(B+1)-row table, one rank window, one
-      // pivot back — instead of three copies of the machinery (38 → 12
-      // Exchanges). Per metric the math is ntileBanded's verbatim;
-      // metrics never mix (every stage keys on mname). The per-metric
-      // bounds broadcast is the sanctioned |metrics|-row totals class;
-      // the offset/band frames are corpus-derived → shuffle_hash.
+      // each ntile(4) over an unpartitioned window would be a
+      // corpus-sized single-task sort of the customer frame; instead the
+      // three metrics unpivot to (o_custkey, mname, v) rows and ONE
+      // GlobalRank.ntileBanded stack ranks them all, every stage keyed
+      // on mname so metrics never mix (38 → 12 Exchanges against three
+      // separate stacks). The 3-row per-metric bounds broadcast.
       val um = base.select(col("o_custkey"), expr(
           "stack(3, 'r', r_days, 'f', f_orders, 'm', m_cents) as (mname, v)"))
         .transform(Pin) // 3 consumers: bounds, offsets, rank join
-      val bounds = um.groupBy("mname").agg(
-        min(col("v")).as("gr_mn"), max(col("v")).as("gr_mx"),
-        count(lit(1)).as("gr_n"))
-      val sb = um.join(broadcast(bounds), "mname")
-        .withColumn("gr_bkt",
-          when(col("v").isNull, lit(-1L))
-            .otherwise(expr("((v - gr_mn) * 1024) div (gr_mx - gr_mn + 1)")))
-      val offs = sb.groupBy("mname", "gr_bkt").agg(count(lit(1)).as("gr_c"))
-        .withColumn("gr_off",
-          coalesce(sum(col("gr_c")).over(Window.partitionBy("mname")
-            .orderBy("gr_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("mname", "gr_bkt", "gr_off")
-      val wIn = Window.partitionBy("mname", "gr_bkt")
-        .orderBy(col("v"), col("o_custkey"))
-      val ranked = sb.join(offs.hint("shuffle_hash"), Seq("mname", "gr_bkt"))
-        .withColumn("gr_rn",
-          col("gr_off") + row_number().over(wIn).cast("long"))
-        .withColumn("band", expr(
-          """CASE WHEN gr_rn <= (gr_n % 4) * (gr_n div 4 + 1)
-              THEN (gr_rn - 1) div (gr_n div 4 + 1) + 1
-              ELSE (gr_n % 4)
-                   + (gr_rn - 1 - (gr_n % 4) * (gr_n div 4 + 1))
-                     div (gr_n div 4) + 1 END""").cast("long"))
+      val ranked = GlobalRank.ntileBanded(um, "v", "o_custkey", 4, "band",
+        by = Seq("mname"))
       val bands = ranked.groupBy("o_custkey").agg(
         max(when(col("mname") === "r", col("band"))).as("r_band"),
         max(when(col("mname") === "f", col("band"))).as("f_band"),

@@ -297,14 +297,11 @@ object Extended {
     * percentile compromise. */
   val ntileDeciles = QuerySpec(
     "ntile_deciles",
-    // two-level banded rank (r20 — VERDICT r19 next-round 3), replacing
-    // ntile(10) over an unpartitioned window: that plan funneled every
-    // priced row through ONE Exchange SinglePartition + sort task — the
-    // exact-semantics contract survives because GlobalRank.ntileBanded
-    // IS ntile decomposed over range buckets (the construction this
-    // key's oracle has always stated, in the same first-r-buckets
-    // formula), with the unique o_orderkey tiebreak keeping boundaries
-    // deterministic
+    // ntile(10) over an unpartitioned window would funnel every priced
+    // row through ONE Exchange SinglePartition + sort task;
+    // GlobalRank.ntileBanded is the same ntile without it (the
+    // construction this key's oracle states), and the unique o_orderkey
+    // tiebreak keeps the boundaries deterministic
     (s, d) =>
       GlobalRank.ntileBanded(
         orders(s, d)

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** Decisions made in one module stay there: only `Pin` (and the
   * `bridge` forwarding file) pins a frame, only `Workspace` creates
-  * a temp dir, and only `Harness` builds a session, in `src/test` too.
+  * a temp dir, only `Harness` builds a session, in `src/test` too, and
+  * only `GlobalRank` computes a scale-safe global position.
   * A new call site elsewhere fails here, and so does a new
   * `SPARK_GRAFT_*` env knob or `spark.graft.*` conf. */
 class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -46,6 +47,14 @@ class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("every session is built by Harness.builder, so specs plan as the mains do") {
     val hits = offenders(files ++ scalaFiles("src/test"),
       Set("Harness.scala", "OneModuleSpec.scala"), "SparkSession.builder")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only GlobalRank takes an exclusive running sum, besides two single-level prefix windows") {
+    // TextScoring.qualityBandTableOf's cumulative histogram and
+    // Relational's skyline_pareto prefix max are not cell offsets
+    val hits = offenders(files, Set("GlobalRank.scala", "TextScoring.scala", "Relational.scala"),
+      "rowsBetween(Window.unboundedPreceding, -1)")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

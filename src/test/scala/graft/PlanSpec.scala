@@ -246,7 +246,14 @@ class PlanSpec extends SparkSpec {
     // true size. A static broadcast pin here is what the round-4 review
     // flagged: at 10¹¹ docs a FIXED span would make the offsets
     // ~10⁸ rows, and a pinned broadcast() would ship them to every task.
-    for (key <- Seq("sequence_pack", "source_interleave", "global_shuffle")) {
+    // Every key whose final plan holds a GlobalRank.prefix join but two:
+    // rfm_segmentation broadcasts its 3-row per-metric bounds table (a
+    // BroadcastHashJoin on mname, by design), and delta_corpus_to_shards
+    // packs inside a pinned frame, so its final plan shows no offsets.
+    for (key <- Seq("sequence_pack", "source_interleave", "global_shuffle",
+        "ntile_deciles", "bpe_sequence_pack", "pipeline_quality_pack",
+        "repeat_upsample", "curriculum_schedule", "length_bucket_pack",
+        "packing_efficiency", "corpus_to_shards")) {
       val p = SparkEntry.queries(key)(spark, sf).queryExecution.sparkPlan.toString
       assert(!p.contains("BroadcastHashJoin"),
         s"[$key] corpus-derived broadcast in static plan:\n$p")

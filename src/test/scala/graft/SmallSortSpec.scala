@@ -13,8 +13,8 @@ import org.apache.spark.sql.graft.bridge
   * than AQE's one-partition size, read in one split anyway, runs in one
   * task: no range exchange, so no sampling job and no range shuffle, and
   * the same rows in the same order. Above the bound, over a split
-  * source, below the root, under a `Pin` and over a `Generate` the range
-  * exchange stays. */
+  * source, below the root and over a `Generate` the range exchange
+  * stays. */
 class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Range exchanges in a frame's plan, inside AQE stages too: the
@@ -75,13 +75,8 @@ class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows.map(_.getLong(0)) == rows.map(_.getLong(0)).sorted)
   }
 
-  test("an orderBy that feeds a Pin, a window or a limit keeps its exchange") {
+  test("an orderBy that feeds a window or a limit keeps its exchange") {
     val sorted = customers(spark).select("c_custkey", "c_nationkey").orderBy("c_custkey")
-    // the pin's copy is planned at the call: its sampling and map jobs
-    // run there, and its readers see the sort's partitions
-    val (pinned, pinJobs) = jobsOf(Pin(sorted))
-    assert(pinJobs == 2, s"pinning a sorted frame started $pinJobs jobs")
-    assert(pinned.collect().toSeq == sorted.collect().toSeq)
     val windowed = sorted.withColumn("n", count(lit(1)).over(Window.partitionBy("c_nationkey")))
     assert(rangeExchanges(windowed) == 1, windowed.queryExecution.executedPlan.toString)
     // a small limit plans as TakeOrderedAndProject, with no exchange to
