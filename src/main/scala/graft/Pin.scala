@@ -19,13 +19,10 @@ import org.apache.spark.sql.graft.bridge
   * that ONE RDD in a `LogicalRDD`, so no later action re-plans the
   * subtree. Eager only adds `RDD.doCheckpoint()`, one more job for the
   * final stage. So a pin is lazy — its first consumer's job fills the
-  * blocks later consumers read — and [[now]] is for two callers: one
-  * that frees the copy's inputs next (a loop round), which an
-  * unmaterialized copy would have to recompute, and one whose
-  * `Par.fork`ed leg runs concurrently (`deltaAdmittedOf`'s corpus state
-  * and append base), where materializing now is what
-  * overlaps the two legs' jobs (a lazy copy would defer its jobs until
-  * after the join). The copy's stats are the optimizer's estimate, not
+  * blocks later consumers read — and [[now]] is for a caller that
+  * frees the copy's inputs next (a loop round: `Iterate`, the BPE merge
+  * loop, `ccLabelsOf`), which an unmaterialized copy would have to
+  * recompute. The copy's stats are the optimizer's estimate, not
   * measured sizes. No caller pins a frame that ends in `orderBy`:
   * [[SmallSort]] would run such a frame's small sort in one task, so
   * its copy would hold one partition.
@@ -36,8 +33,7 @@ object Pin extends (DataFrame => DataFrame) {
   def apply(df: DataFrame): DataFrame = pin(df, eager = false)
 
   /** `df`, stored and materialized before this returns: only where the
-    * caller frees the copy's inputs next, or where a `Par.fork`ed leg
-    * runs concurrently. */
+    * caller frees the copy's inputs next. */
   def now(df: DataFrame): DataFrame = pin(df, eager = true)
 
   /** Free a pinned frame's blocks and checkpoint files — only once its

@@ -2,8 +2,9 @@ package graft.llm
 
 import graft.Tables._
 import graft.{Pin, QuerySpec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Deduplication family over `documents`: exact, MinHash+LSH, SimHash,
   * n-gram Jaccard. Designed as the 100 TB shapes:
@@ -912,6 +913,22 @@ object Dedup {
             ORDER BY cand.id1, cand.id2""")
   )
 
+  /** The blocklist side of [[bloomPruneJoin]] and [[bloomFprCalib]]:
+    * the distinct 8-char shingles of the eval docs (doc_id < 20), and
+    * a probe column — whether a row's `s` might be among them, by a
+    * bloom filter over xxhash64(s) at fpp 0.03. The shingles are
+    * pinned: they feed the count, the bloom build and the caller's
+    * exact join. expectedNumItems comes from a count over the (small)
+    * eval side — sanctioned scalar feedback, same as kmeans' seed
+    * collect. */
+  private def blocklistBloomOf(docs: DataFrame): (DataFrame, Column) = {
+    val bsh = TextOps.shingleRows(docs.filter(col("doc_id") < 20), 8)
+      .select("s").distinct().transform(Pin)
+    val bf = bsh.select(xxhash64(col("s")).as("h"))
+      .stat.bloomFilter("h", math.max(bsh.count(), 1L), 0.03)
+    (bsh, bridge.mightContain(bf, xxhash64(col("s"))))
+  }
+
   /** Bloom-pruned overlap join — decontaminate's constant-memory scale
     * path: instead of broadcasting the eval-set's exact shingle SET, the
     * training side is pre-filtered through a Bloom filter built over it
@@ -937,25 +954,7 @@ object Dedup {
     "bloom_prune_join",
     (s, d) => {
       val docs = documents(s, d)
-      // pin: bsh feeds THREE actions (the count, the bloom build, the
-      // final join) — unpinned, each would compute the shingle explode
-      val bsh = TextOps.shingleRows(docs.filter(col("doc_id") < 20), 8)
-        .select("s").distinct().transform(Pin)
-      // expectedNumItems from a count over the (small) eval side —
-      // sanctioned scalar feedback, same as kmeans' seed collect.
-      // Keyed by xxhash64(s): putLong/mightContainLong is the pairing
-      // BloomFilterMightContain evaluates against
-      val bf = bsh.select(xxhash64(col("s")).as("h"))
-        .stat.bloomFilter("h", math.max(bsh.count(), 1L), 0.03)
-      val bfBytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos); bos.toByteArray
-      }
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.graft.bridge
-      val mightContain = bridge.column(BloomFilterMightContain(
-        Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
-        bridge.expression(xxhash64(col("s")))))
+      val (bsh, mightContain) = blocklistBloomOf(docs)
       // map-side (doc_id, s) distinct (the ngramPhase1 rule): the bloom
       // probe then prunes the exploded rows BEFORE the semi-join's
       // exchange, and no distinct shuffle precedes it
@@ -1006,19 +1005,7 @@ object Dedup {
     "bloom_fpr_calib",
     (s, d) => {
       val docs = documents(s, d)
-      val bsh = TextOps.shingleRows(docs.filter(col("doc_id") < 20), 8)
-        .select("s").distinct().transform(Pin)
-      val bf = bsh.select(xxhash64(col("s")).as("h"))
-        .stat.bloomFilter("h", math.max(bsh.count(), 1L), 0.03)
-      val bfBytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos); bos.toByteArray
-      }
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.graft.bridge
-      val mightContain = bridge.column(BloomFilterMightContain(
-        Literal(bfBytes, org.apache.spark.sql.types.BinaryType),
-        bridge.expression(xxhash64(col("s")))))
+      val (bsh, mightContain) = blocklistBloomOf(docs)
       // true negatives: training shingles NOT in the blocklist (exact)
       val negatives = TextOps.shingleRows(docs.filter(col("doc_id") >= 20), 8)
         .select("s").distinct()

@@ -597,60 +597,22 @@ object Similarity {
     * (|Q|·m·k rows) are the ONLY broadcasts — both config-sized, never
     * corpus-derived. Encoding reuses kmeans' measured WIDE layout
     * (d rows × k columns: N·d scan rows with k multiply-adds in
-    * codegen, not an N·d·k fan-out), and ONE scored frame feeds both
-    * the corpus codes and the query tables (the dims are shared, so
-    * including Σq² costs nothing and keeps dt a true distance). ADC
-    * itself is a map-side broadcast join on (sub, code) + one
-    * (qid, vec) partial agg — the corpus is scanned once, shuffled
-    * never. Top-k per query is a qid-partitioned window; at real query
-    * volume the per-partition partial top-k refinement applies. */
+    * codegen, not an N·d·k fan-out); the query tables score only the
+    * query vectors against the same codebook (including Σq² costs
+    * nothing and keeps dt a true distance). ADC itself is a map-side
+    * broadcast join on (sub, code) + one (qid, vec) partial agg — the
+    * codes are never shuffled. Top-k per query is a qid-partitioned
+    * window; at real query volume the per-partition partial top-k
+    * refinement applies. */
   /** The full PQ pipeline (seed codebook → wide encode → ADC → top-5)
-    * over an arbitrary embeddings frame — extracted so
-    * pq_recall_calib can run the identical tier over the sampled
+    * over an arbitrary embeddings frame: the index build
+    * [[pqIndexFramesOf]] queried by [[pqQueryFromIndex]], the same two
+    * halves ann_index_persist runs across a stored index — extracted
+    * so pq_recall_calib can run the identical tier over the sampled
     * calibration corpus (the lshBucketTopkOf/ivfTopkOf discipline). */
   private[graft] def pqTopkOf(e: DataFrame): DataFrame = {
-    val sess = e.sparkSession
-    val comp = quantComponents(e).select("vec_id", "dim", "q")
-      .transform(Pin)
-    val seedIds: Array[Long] = seedIdsOf(comp, 16)
-    val ks = seedIds.indices
-    if (seedIds.isEmpty)
-      sess.range(0).select(col("id").as("qid"), col("id").as("rank"),
-        col("id").as("vec_id"), col("id").as("adist"))
-    else {
-        val cent0 = comp
-          .filter(col("vec_id").isin(seedIds.map(Long.box): _*))
-          .select(col("vec_id").as("cluster"), col("dim"), col("q").as("c"))
-        val wide = widenByDim(cent0, seedIds)
-        // s_k(vec, sub) = Σ_dims∈sub (q − c_k)² — true sub-distances, so
-        // this one frame is BOTH the encode argmin input and (filtered
-        // to queries) the ADC distance table
-        val scored = comp.join(broadcast(wide), Seq("dim"))
-          .withColumn("sub", expr("(dim - 1) div 16"))
-          .groupBy("vec_id", "sub")
-          .agg(sum((col("c0") - col("q")) * (col("c0") - col("q"))).as("s0"),
-            ks.drop(1).map(k =>
-              sum((col(s"c$k") - col("q")) * (col(s"c$k") - col("q"))).as(s"s$k")): _*)
-          .transform(Pin)
-        val best = bestScoreOf(ks)
-        // first-match on ascending slot order = smallest code wins ties,
-        // matching the oracle's ORDER BY (d2, slot)
-        val pick = ks.foldRight(lit(ks.last.toLong)) { (k, el) =>
-          when(col(s"s$k") === best, lit(k.toLong)).otherwise(el) }
-        val codes = scored.select(col("vec_id"), col("sub"), pick.as("code"))
-        val dtab = scored.filter(col("vec_id") < 10)
-          .selectExpr("vec_id AS qid", "sub",
-            s"stack(${ks.length}, ${ks.map(k => s"${k}L, s$k").mkString(", ")}) AS (code, dt)")
-        val scores = codes.join(broadcast(dtab), Seq("sub", "code"))
-          .filter(col("qid") =!= col("vec_id"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(col("dt")).as("adist"))
-        val w = Window.partitionBy("qid").orderBy(col("adist").asc, col("vec_id"))
-        scores.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 5)
-          .select("qid", "rank", "vec_id", "adist")
-          .orderBy("qid", "rank")
-    }
+    val (cb, cd) = pqIndexFramesOf(e)
+    pqQueryFromIndex(e.filter(col("vec_id") < 10), cb, cd)
   }
 
   /** The matching PQ oracle over table/CTE `tbl` (same generator
@@ -715,12 +677,11 @@ object Similarity {
     * codebook is the widenByDim layout (dim, c0..c15 milli-unit
     * centroid components), codes is (vec_id, sub, code), together the
     * WHOLE steady-state index (a query batch needs nothing else — the
-    * slot count is the codebook's own column count). Identical math to
-    * [[annPq]]'s in-session build: same seeds, same wide argmin
-    * encode, same tie rule, so a query batch over the stored frames is
-    * row-identical to ann_pq by construction. Empty corpus → empty
-    * frames with the right shape (one c0 slot, zero rows), which the
-    * query side handles as zero candidates. */
+    * slot count is the codebook's own column count). [[annPq]] builds
+    * the same frames in-session, so a query batch over the stored
+    * frames is row-identical to ann_pq by construction. Empty corpus →
+    * empty frames with the right shape (one c0 slot, zero rows), which
+    * the query side handles as zero candidates. */
   private[graft] def pqIndexFramesOf(e: DataFrame): (DataFrame, DataFrame) = {
     val s = e.sparkSession
     val comp = quantComponents(e).select("vec_id", "dim", "q")
@@ -734,7 +695,10 @@ object Similarity {
       val cent0 = comp
         .filter(col("vec_id").isin(seedIds.map(Long.box): _*))
         .select(col("vec_id").as("cluster"), col("dim"), col("q").as("c"))
-      val wide = widenByDim(cent0, seedIds)
+      // pin: the codebook feeds the corpus encode and a query batch's
+      // distance tables, so its aggregate runs once, at the call, and
+      // stays out of the query plan
+      val wide = widenByDim(cent0, seedIds).transform(Pin)
       // the encode is pqCodesOf — the ONE definition the incremental
       // delta_ann_index path re-applies to arriving shards, so the
       // stored codes and a later shard's codes can never drift
@@ -742,21 +706,30 @@ object Similarity {
     }
   }
 
-  /** PQ encode of arbitrary (vec_id, dim, q) components against a
-    * FROZEN wide codebook: sub-distance argmin per (vector, subspace),
-    * ties to the smallest code — the identical math as
-    * [[pqIndexFramesOf]]'s in-build encode (same wide layout, same
-    * bestScoreOf/first-match tie rule), extracted so the incremental
-    * path cannot drift from what the stored index believes. */
-  private[graft] def pqCodesOf(comp: DataFrame,
-      codebook: DataFrame): DataFrame = {
+  /** Sub-distances of (vec_id, dim, q) components to every entry of a
+    * wide codebook: one row per (vec_id, sub) with s_k = Σ_dims∈sub
+    * (q − c_k)², the encode argmin input and the ADC distance table
+    * alike. Returns the slot range with the frame. */
+  private def pqSubScoresOf(comp: DataFrame,
+      codebook: DataFrame): (Range, DataFrame) = {
     val ks = 0 until codebook.columns.count(_.matches("c\\d+"))
-    val scored = comp.join(broadcast(codebook), Seq("dim"))
+    (ks, comp.join(broadcast(codebook), Seq("dim"))
       .withColumn("sub", expr("(dim - 1) div 16"))
       .groupBy("vec_id", "sub")
       .agg(sum((col("c0") - col("q")) * (col("c0") - col("q"))).as("s0"),
         ks.drop(1).map(k =>
-          sum((col(s"c$k") - col("q")) * (col(s"c$k") - col("q"))).as(s"s$k")): _*)
+          sum((col(s"c$k") - col("q")) * (col(s"c$k") - col("q"))).as(s"s$k")): _*))
+  }
+
+  /** PQ encode of arbitrary (vec_id, dim, q) components against a
+    * FROZEN wide codebook: sub-distance argmin per (vector, subspace),
+    * ties to the smallest code (bestScoreOf, first match) — the encode
+    * [[pqIndexFramesOf]] builds its codes with, shared so the
+    * incremental path cannot drift from what the stored index
+    * believes. */
+  private[graft] def pqCodesOf(comp: DataFrame,
+      codebook: DataFrame): DataFrame = {
+    val (ks, scored) = pqSubScoresOf(comp, codebook)
     val best = bestScoreOf(ks)
     val pick = ks.foldRight(lit(ks.last.toLong)) { (k, el) =>
       when(col(s"s$k") === best, lit(k.toLong)).otherwise(el) }
@@ -844,21 +817,15 @@ object Similarity {
   /** Asymmetric-distance query batch against a STORED PQ index: the
     * query vectors' sub-distance tables are computed fresh against the
     * stored codebook (broadcast — d×k rows, config-sized), then ADC is
-    * the stored codes' broadcast join + one (qid, vec) partial agg,
-    * exactly the annPq plan downstream of its scored frame. The ONLY
+    * the stored codes' broadcast join + one (qid, vec) partial agg —
+    * the query half of [[pqTopkOf]], here over stored frames. The ONLY
     * corpus-sized input is the stored codes scan — the 100 TB serving
     * shape, where the index build is the expensive once and this is
     * the steady state. */
   private[graft] def pqQueryFromIndex(queries: DataFrame, codebook: DataFrame,
       codes: DataFrame): DataFrame = {
-    val ks = 0 until codebook.columns.count(_.matches("c\\d+"))
-    val qcomp = quantComponents(queries).select("vec_id", "dim", "q")
-    val scoredQ = qcomp.join(broadcast(codebook), Seq("dim"))
-      .withColumn("sub", expr("(dim - 1) div 16"))
-      .groupBy("vec_id", "sub")
-      .agg(sum((col("c0") - col("q")) * (col("c0") - col("q"))).as("s0"),
-        ks.drop(1).map(k =>
-          sum((col(s"c$k") - col("q")) * (col(s"c$k") - col("q"))).as(s"s$k")): _*)
+    val (ks, scoredQ) = pqSubScoresOf(
+      quantComponents(queries).select("vec_id", "dim", "q"), codebook)
     val dtab = scoredQ.selectExpr("vec_id AS qid", "sub",
       s"stack(${ks.length}, ${ks.map(k => s"${k}L, s$k").mkString(", ")}) AS (code, dt)")
     val scores = codes.join(broadcast(dtab), Seq("sub", "code"))

@@ -487,18 +487,15 @@ private[llm] trait TextPacking { self: TextOps.type =>
   val repeatUpsample = QuerySpec(
     "repeat_upsample",
     (s, d) => {
-      // OVERLAPPED legs (guide §2.6, r20 — the mixtureSelectOf shape):
-      // the apportionment build (its config-bounded pin inside
-      // mixtureAllocFromCounts) and the md5-bucket rank share no data
-      // dependency until the copies join — fork the alloc leg so its
-      // jobs run while this thread builds the rank; the rank pin fills
-      // in the final action
-      val allocLeg = graft.Par.fork(mixtureAllocFrameOf(s, d, 1)
-        .select(col("source"), col("corpus_docs"), col("uncapped")))
+      // the apportionment (per-source counts, its config-bounded pin
+      // inside mixtureAllocFromCounts) and the md5-bucket rank share no
+      // data dependency until the copies join; AQE runs their stages
+      // side by side in the final action
+      val alloc = mixtureAllocFrameOf(s, d, 1)
+        .select(col("source"), col("corpus_docs"), col("uncapped"))
       val db = documents(s, d).select(col("doc_id"), col("source"),
         md5(concat(lit("up-v1:"), col("doc_id").cast("string"))).as("k"))
       val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id")
-      val alloc = allocLeg()
       rnk.join(alloc.hint("shuffle_hash"), Seq("source"))
         .withColumn("copies",
           expr("uncapped div corpus_docs") +
@@ -1306,21 +1303,19 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * broadcast (the pipeline_quality_pack rule); clusterLabels comes
     * off its materialized stage with real stats. */
   def cleanKeepSurvivorsOf(s: SparkSession, d: String): DataFrame =
-    cleanKeepSurvivorsWith(s, d, documents(s, d))
+    survivorsOf(documents(s, d), documents(s, d), Dedup.clusterLabels(s, d))
 
-  /** [[cleanKeepSurvivorsOf]] over an arbitrary PROBE projection of the
-    * corpus (any frame carrying doc_id, one row per doc): the gate
-    * lists are computed from the raw corpus either way, and the
-    * semi/anti joins only read doc_id from the probe side — so a caller
-    * that needs just per-doc metadata passes the narrow projection and
-    * the text payload never crosses the survivor-join exchanges
-    * (guide §2.3/§8, r20). */
-  def cleanKeepSurvivorsWith(s: SparkSession, d: String,
-      probe: DataFrame): DataFrame = {
-    val docs = documents(s, d)
+  /** The clean ∩ keep survivors of corpus frame `docs` under near-dup
+    * cluster `labels` (doc_id, cluster_id), over a PROBE projection of
+    * `docs` (any frame carrying doc_id, one row per doc): the gate lists
+    * are computed from `docs` either way, and the semi/anti joins only
+    * read doc_id from the probe side — so a caller that needs just
+    * per-doc metadata passes the narrow projection and the text payload
+    * never crosses the survivor-join exchanges (guide §2.3/§8, r20). */
+  private def survivorsOf(probe: DataFrame, docs: DataFrame,
+      labels: DataFrame): DataFrame = {
     val clean = corpusCleanOf(docs).select("doc_id")
-    val drop = Dedup.clusterLabels(s, d)
-      .filter(col("doc_id") =!= col("cluster_id"))
+    val drop = labels.filter(col("doc_id") =!= col("cluster_id"))
       .select("doc_id")
     probe
       .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
@@ -1335,19 +1330,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * deterministic, no RNG, and a hot source never becomes one giant
     * window partition. Returns the selected doc_id set. */
   def mixtureSelectOf(surv: DataFrame): DataFrame = {
-    // OVERLAPPED legs (guide §2.6 — VERDICT r19 next-round 5): the
-    // apportionment (per-source counts → quotas, one config-bounded
-    // pin inside mixtureAllocOf) and the rank pin (md5-bucket
-    // projection of the survivor corpus) share NO data dependency until
-    // the final quota join — fork the alloc build so its jobs run while
-    // this thread builds the rank; the rank pin fills in the final
-    // action.
-    val allocLeg = graft.Par.fork(
-      mixtureAllocOf(surv, 2).select(col("source"), col("alloc_docs")))
+    // the apportionment (per-source counts → quotas, one config-bounded
+    // pin inside mixtureAllocOf) and the rank (md5-bucket projection of
+    // the survivor corpus) meet only at the final quota join
+    val alloc = mixtureAllocOf(surv, 2).select(col("source"), col("alloc_docs"))
     val db = surv.select(col("doc_id"), col("source"),
       md5(concat(lit("mix-v1:"), col("doc_id").cast("string"))).as("k"))
     val rnk = bucketRankOf(db, Seq("source"), Seq(), "doc_id")
-    val alloc = allocLeg()
     rnk.join(alloc.hint("shuffle_hash"), Seq("source"))
       .filter(col("rnk") < col("alloc_docs"))
       .select("doc_id")
@@ -1373,41 +1362,7 @@ private[llm] trait TextPacking { self: TextOps.type =>
   val corpusToShards = QuerySpec(
     "corpus_to_shards",
     (s, d) => {
-      // NARROW survivor pin (guide §2.3/§8, r20): everything downstream
-      // needs only per-doc METADATA — (doc_id, source) for the mixture,
-      // n_tokens for packing, the manifest row columns for the manifest
-      // — so all of it is computed AT THE SCAN (the shared
-      // manifestRowsOf projection, values identical to computing them
-      // post-selection) and the text payload never crosses the
-      // survivor-join exchanges or enters a checkpoint block. The pin
-      // feeds the per-source count (alloc), the rank and the selection
-      // re-join — the clean/dedup gate chain must run once, not once
-      // per consumer (the pipeline_quality_pack rule)
-      val surv = cleanKeepSurvivorsWith(s, d,
-          manifestRowsOf(documents(s, d),
-            Seq(col("source"), size(tokens).cast("long").as("n_tokens"))))
-        .transform(Pin)
-      val sel = mixtureSelectOf(surv)
-      // selected pin: the packer reads its input twice and the
-      // manifest projection reads it once more
-      val selected = surv
-        .join(sel.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .transform(Pin)
-      // pack span from an upper doc_id bound (span-invariant): the raw
-      // corpus's memoized max, the pipeline_quality_pack rule
-      val packed = packCountsWithSpan(selected.select("doc_id", "n_tokens"),
-        packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
-      selected.select("shard", "doc_id", "ws", "chars", "h")
-        .join(packed.select(col("doc_id"), col("bin_id"))
-          .hint("shuffle_hash"), Seq("doc_id"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("ws_tokens"),
-          sum(col("chars")).as("text_chars"),
-          min(col("doc_id")).as("min_doc_id"),
-          max(col("doc_id")).as("max_doc_id"),
-          countDistinct(col("bin_id")).as("start_bins"),
-          expr("cast(sum(h) % 2305843009213693951 as bigint)")
-            .as("checksum"))
+      exportOf(s, d, documents(s, d), Dedup.clusterLabels(s, d))._3
         .orderBy("shard")
     },
     Some(s"""WITH RECURSIVE ${Dedup.keepLabelsCtesSql},
@@ -1454,9 +1409,9 @@ private[llm] trait TextPacking { self: TextOps.type =>
   )
 
   /** The manifest aggregation over per-doc manifest rows joined with
-    * their pack bin — ONE definition shared by the frozen corpus state
-    * and the delta side, so the two ⊕ operands can never drift in
-    * shape. */
+    * their pack bin — ONE definition shared by corpus_to_shards, the
+    * frozen corpus state and the delta side, so the two ⊕ operands can
+    * never drift in shape. */
   private[llm] def manifestAggOf(rows: DataFrame, bins: DataFrame): DataFrame =
     rows
       .join(bins.hint("shuffle_hash"), Seq("doc_id"))
@@ -1467,6 +1422,43 @@ private[llm] trait TextPacking { self: TextOps.type =>
         max(col("doc_id")).as("max_doc_id"),
         countDistinct(col("bin_id")).as("start_bins"),
         expr("cast(sum(h) % 2305843009213693951 as bigint)").as("checksum"))
+
+  /** The export chain over corpus frame `docs` (survivors → mixture
+    * selection → pack → manifest) — ONE definition behind
+    * corpus_to_shards (the whole corpus) and the frozen corpus state
+    * (the `< split` slice). Returns the survivor pin, the selected
+    * docs' pack (doc_id, n_tokens, bin_id) and their unsorted shard
+    * manifest.
+    *
+    * NARROW survivor pin (guide §2.3/§8, r20): everything downstream
+    * needs only per-doc METADATA — (doc_id, source) for the mixture,
+    * n_tokens for packing, the manifest row columns for the manifest —
+    * so all of it is computed AT THE SCAN (the shared manifestRowsOf
+    * projection, values identical to computing them post-selection) and
+    * the text payload never crosses the survivor-join exchanges or
+    * enters a checkpoint block. The pin feeds the per-source count
+    * (alloc), the rank and the selection re-join — the clean/dedup gate
+    * chain must run once, not once per consumer (the
+    * pipeline_quality_pack rule). */
+  private def exportOf(s: SparkSession, d: String, docs: DataFrame,
+      labels: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val surv = survivorsOf(manifestRowsOf(docs,
+        Seq(col("source"), size(tokens).cast("long").as("n_tokens"))),
+      docs, labels).transform(Pin)
+    // selected pin: the packer reads its input twice and the manifest
+    // projection reads it once more
+    val selected = surv
+      .join(mixtureSelectOf(surv).hint("shuffle_hash"), Seq("doc_id"),
+        "left_semi")
+      .transform(Pin)
+    // pack span from an upper doc_id bound (span-invariant): the raw
+    // corpus's memoized max, the pipeline_quality_pack rule
+    val packed = packCountsWithSpan(selected.select("doc_id", "n_tokens"),
+      packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
+    (surv, packed,
+      manifestAggOf(selected.select("shard", "doc_id", "ws", "chars", "h"),
+        packed.select(col("doc_id"), col("bin_id"))))
+  }
 
   /** The FROZEN corpus-side export state for the incremental pipeline —
     * corpus_to_shards run over the corpus slice (doc_id < split), built
@@ -1484,34 +1476,13 @@ private[llm] trait TextPacking { self: TextOps.type =>
   def ctsCorpusState(s: SparkSession, d: String): (DataFrame, DataFrame) =
     graft.Materialize.oncePair(s, s"cts_corpus|$d") {
       val split = Dedup.deltaSplitOf(s, d)
-      val corp = documents(s, d).filter(col("doc_id") < split)
-      val clean = corpusCleanOf(corp).select("doc_id")
-      val drop = Dedup.corpusClusterLabels(s, d)
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select("doc_id")
-      // NARROW survivor pin (guide §2.3/§8, r20 — the corpus_to_shards
-      // rule): per-doc metadata computed at the scan, text never
-      // crosses the survivor joins or a checkpoint. Feeds the selection
-      // (alloc count + rank) and the survivor-index projection
-      val surv = manifestRowsOf(corp,
-          Seq(col("source"), size(tokens).cast("long").as("n_tokens")))
-        .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-        .transform(Pin)
-      val selected = surv
-        .join(mixtureSelectOf(surv).hint("shuffle_hash"),
-          Seq("doc_id"), "left_semi")
-        .transform(Pin)
-      // pack span from the raw corpus's memoized max (the
-      // corpus_to_shards rule; span-invariant)
-      val packed = packCountsWithSpan(selected.select("doc_id", "n_tokens"),
-        packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
-      val survIdx = surv.select("doc_id", "source")
+      val (surv, packed, manifest) = exportOf(s, d,
+        documents(s, d).filter(col("doc_id") < split),
+        Dedup.corpusClusterLabels(s, d))
+      (surv.select("doc_id", "source")
         .join(packed.select("doc_id", "n_tokens", "bin_id")
-          .hint("shuffle_hash"), Seq("doc_id"), "left")
-      (survIdx,
-        manifestAggOf(selected.select("shard", "doc_id", "ws", "chars", "h"),
-          packed.select(col("doc_id"), col("bin_id"))))
+          .hint("shuffle_hash"), Seq("doc_id"), "left"),
+        manifest)
     }
 
   /** delta_corpus_to_shards — the INCREMENTAL composition of the export
@@ -1558,13 +1529,12 @@ private[llm] trait TextPacking { self: TextOps.type =>
         shard.select("doc_id", "text"))
       .filter(col("is_dup") === 1).select("doc_id")
     // survivor pin: feeds the per-source count, the rank and the
-    // admit re-join; `Pin.now` so the gates run while
-    // deltaAdmittedOf's forked corpus leg does
+    // admit re-join
     manifestRowsOf(shard,
         Seq(col("source"), size(tokens).cast("long").as("n_tokens")))
       .join(clean.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .join(drop.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-      .transform(Pin.now)
+      .transform(Pin)
   }
 
   /** The delta chain below the manifest: shard survivors → frozen-quota
@@ -1574,23 +1544,8 @@ private[llm] trait TextPacking { self: TextOps.type =>
     * checkpoint, guide §2.3/§8 r20). Exposed for DeltaCtsSpec's
     * ⊕-equivalence check. */
   def deltaAdmittedOf(s: SparkSession, d: String): DataFrame = {
-    // OVERLAPPED legs (guide §2.6 — VERDICT r19 next-round 5): the
-    // frozen corpus export state (a stored-index read when warm, the
-    // whole corpus-side build when cold) and the arriving shard's
-    // survivor gates share NO data dependency — fork the corpus leg so
-    // the shard gates' tasks back-fill its stragglers instead of
-    // waiting for a sequential driver call. Materialize's once-semantics
-    // hold under the race (MaterializeConcurrencySpec).
-    val corpusLeg = graft.Par.fork(ctsCorpusState(s, d))
+    val (survIdx, _) = ctsCorpusState(s, d)
     val survS = deltaShardSurvivorsOf(s, d)
-    val (survIdx, _) = corpusLeg()
-    // append-base aggregate forked too: it reads ONLY the stored index,
-    // so it runs concurrently with the whole admission chain below and
-    // is joined right before the bin offset needs it
-    val baseBinLeg = graft.Par.fork(
-      Option(survIdx.agg(sum(col("n_tokens"))).first().get(0))
-        .map(_.asInstanceOf[Long]).map(t => (t + 2047L) / 2048L)
-        .getOrElse(0L))
     // union allocation over per-source COUNTS; quota = headroom left
     // after the frozen corpus selection
     val cnts = survIdx.groupBy("source")
@@ -1613,21 +1568,22 @@ private[llm] trait TextPacking { self: TextOps.type =>
       .join(quota.hint("shuffle_hash"), Seq("source"))
       .filter(col("rnk") < col("quota"))
       .select("doc_id")
-    // `Pin.now`: the admission chain runs while baseBinLeg does
     val admitted = survS
       .join(adm.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-      .transform(Pin.now)
+      .transform(Pin)
     // append at the next EMPTY bin: base = ceil(Σ selected corpus
-    // tokens / 2048), one stored-index aggregate (the A10 pattern) —
-    // computed on the forked leg above, joined here
-    val baseBin = baseBinLeg()
+    // tokens / 2048), a one-row aggregate of the stored index broadcast
+    // into the bin offset (0 for an empty selection)
+    val baseBin = broadcast(survIdx.agg(
+      expr("coalesce((sum(n_tokens) + 2047) div 2048, 0)").as("base_bin")))
     // the append pack's chunk span from an upper doc_id bound
     // (span-invariant): the raw corpus's memoized max, since
     // admitted ⊆ shard ⊆ documents
     admitted.join(
       packCountsWithSpan(admitted.select("doc_id", "n_tokens"),
           packSpanFor(maxOf(s, d, "documents", "doc_id").getOrElse(0L)))
-        .select(col("doc_id"), (col("bin_id") + lit(baseBin)).as("bin_id"))
+        .crossJoin(baseBin)
+        .select(col("doc_id"), (col("bin_id") + col("base_bin")).as("bin_id"))
         .hint("shuffle_hash"),
       Seq("doc_id"))
   }

@@ -80,9 +80,10 @@ private[graft] object GlobalRank {
     * but a single hot metric VALUE still lands in one bucket: range
     * banding cannot split ties.
     *
-    * The per-group bounds (a |groups|-row table) broadcast. `df` feeds
-    * three plan branches (bounds, bucket totals, the join-back) and is
-    * not pinned: pass a bare pruned scan or an already-pinned frame. */
+    * The per-group bounds (a |groups|-row table) broadcast, planned
+    * once for both prefix branches. `df` feeds three plan branches
+    * (bounds, bucket totals, the join-back) and is not pinned: pass a
+    * bare pruned scan or an already-pinned frame. */
   def ntileBanded(df: DataFrame, metric: String, tiebreak: String,
       k: Int, out: String, by: Seq[String] = Nil): DataFrame = {
     val bounds = broadcast(df.groupBy(by.map(col): _*).agg(
@@ -93,7 +94,10 @@ private[graft] object GlobalRank {
         when(col(metric).isNull, lit(-1L))
           .otherwise(expr(
             s"(($metric - gr_mn) * $Buckets) div (gr_mx - gr_mn + 1)")))
-    prefix(banded, by, Seq("gr_bkt"), Seq(metric, tiebreak), "gr_p")
+    // gr_n rides in the reset keys (constant per `by` group, so the
+    // ranks are unchanged): both prefix branches then keep the same
+    // bounds columns, plan one aggregate and reuse its broadcast
+    prefix(banded, by :+ "gr_n", Seq("gr_bkt"), Seq(metric, tiebreak), "gr_p")
       .withColumn(out, expr(
         s"""CASE WHEN gr_p < (gr_n % $k) * (gr_n div $k + 1)
             THEN gr_p div (gr_n div $k + 1) + 1

@@ -4,6 +4,7 @@ import graft.Tables._
 import graft.{Pin, QuerySpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Iterative graph analytics as deterministic dataflow: PageRank over the
   * nation adjacency graph (edge u→v iff u≠v share a region). The graph's
@@ -247,25 +248,18 @@ object Graph {
       .get("spark.graft.triangle.bloom.edgesPerShard", "64000000").toLong
     val nShards = math.max(1L, (nEdges - 1) / math.max(edgesPerShard, 1L) + 1).toInt
     val keys = oriented.select(xxhash64(col("u"), col("v")).as("k"))
-    val blobs = (0 until nShards).map { j =>
+    val filters = (0 until nShards).map { j =>
       val part = if (nShards == 1) keys
                  else keys.filter(pmod(col("k"), lit(nShards)) === j)
-      val bf = part.stat.bloomFilter(
-        "k", math.max(nEdges / nShards, 1L), 0.03)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos); bos.toByteArray
+      part.stat.bloomFilter("k", math.max(nEdges / nShards, 1L), 0.03)
     }
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graft.bridge
     val probeKey = xxhash64(col("u"), col("w"))
-    def mc(b: Array[Byte]) = bridge.column(BloomFilterMightContain(
-      Literal(b, org.apache.spark.sql.types.BinaryType),
-      bridge.expression(probeKey)))
+    def mc(j: Int) = bridge.mightContain(filters(j), probeKey)
     val mightClose =
-      if (nShards == 1) mc(blobs(0))
+      if (nShards == 1) mc(0)
       else (1 until nShards).foldLeft(
-        when(pmod(probeKey, lit(nShards)) === 0, mc(blobs(0)))) {
-          (acc, j) => acc.when(pmod(probeKey, lit(nShards)) === j, mc(blobs(j)))
+        when(pmod(probeKey, lit(nShards)) === 0, mc(0))) {
+          (acc, j) => acc.when(pmod(probeKey, lit(nShards)) === j, mc(j))
         }.otherwise(lit(false)) // unreachable: pmod ∈ [0, S)
     // wedge + close joins hinted shuffle_hash: both sides are
     // corpus-derived (never broadcast), and hashing beats sorting the

@@ -8,12 +8,26 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.util.sketch.BloomFilter
 
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Whether `probe` might be in `bf`: Catalyst's `BloomFilterMightContain`
+    * (the expression Spark's runtime filter injects, not public API) over
+    * the serialized filter as a binary literal, so the test stays inside
+    * whole-stage codegen. `probe` is the LONG key the filter was built
+    * over (`putLong`/`mightContainLong`). */
+  def mightContain(bf: BloomFilter, probe: Column): Column = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bos)
+    column(BloomFilterMightContain(Literal(bos.toByteArray, BinaryType),
+      expression(probe)))
+  }
 
   /** A clone of `s` (same SparkContext, copied conf/state) with the given
     * conf overrides — the thread-safe way to give ONE read a legacy flag

@@ -4,11 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
 
 /** Pins Materialize's once-semantics under driver-thread concurrency —
-  * the property Par.fork-based job overlap (deltaAdmittedOf's corpus ∥
-  * shard legs) relies on: N racing callers of one key produce ONE
-  * stored artifact that every caller reads identically; a losing
-  * duplicate build is wasted-but-identical work, never a second
-  * artifact and never an error. */
+  * the property `ConcurrentBench`'s racing keys rely on: N racing
+  * callers of one key produce ONE stored artifact that every caller
+  * reads identically; a losing duplicate build is wasted-but-identical
+  * work, never a second artifact and never an error. */
 class MaterializeConcurrencySpec extends SparkSpec {
 
   test("Materialize.once: concurrent same-key callers share one artifact") {
@@ -18,9 +17,11 @@ class MaterializeConcurrencySpec extends SparkSpec {
       builds.incrementAndGet()
       spark.range(100).select(col("id"), (col("id") * 3).as("v"))
     }
-    val legs = (1 to 4).map(_ => Par.fork(
+    val results = new Array[Array[org.apache.spark.sql.Row]](4)
+    val legs = results.indices.map(i => new Thread(() => results(i) =
       Materialize.once(spark, key)(frame).collect().sortBy(_.getLong(0))))
-    val results = legs.map(_.apply())
+    legs.foreach(_.start())
+    legs.foreach(_.join())
     // every caller read the same 100 rows
     assert(results.forall(_.length == 100))
     assert(results.forall(r => r.sameElements(results.head)),
@@ -36,11 +37,5 @@ class MaterializeConcurrencySpec extends SparkSpec {
     // row equality; build count may exceed 1 (losers are deleted),
     // but the recorded stage-build time is single-keyed
     assert(Materialize.buildSecs.containsKey(key))
-  }
-
-  test("Par.fork: failures propagate on join, not silently") {
-    val leg = Par.fork[Int] { throw new IllegalStateException("boom") }
-    val e = intercept[IllegalStateException](leg())
-    assert(e.getMessage == "boom")
   }
 }

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 
 /** Decisions made in one module stay there: only `Pin` (and the
   * `bridge` forwarding file) pins a frame, only `Workspace` creates
-  * a temp dir, only `Harness` builds a session, in `src/test` too, and
-  * only `GlobalRank` computes a scale-safe global position.
+  * a temp dir, only `Harness` builds a session, in `src/test` too,
+  * only `GlobalRank` computes a scale-safe global position, and only
+  * `ConcurrentBench` starts a driver thread.
   * A new call site elsewhere fails here, and so does a new
   * `SPARK_GRAFT_*` env knob or `spark.graft.*` conf. */
 class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -55,6 +56,11 @@ class OneModuleSpec extends org.scalatest.funsuite.AnyFunSuite {
     // Relational's skyline_pareto prefix max are not cell offsets
     val hits = offenders(files, Set("GlobalRank.scala", "TextScoring.scala", "Relational.scala"),
       "rowsBetween(Window.unboundedPreceding, -1)")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no driver thread outside ConcurrentBench: Spark's scheduler overlaps independent stages") {
+    val hits = offenders(files, Set("ConcurrentBench.scala"), "new Thread")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

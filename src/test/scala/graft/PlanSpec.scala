@@ -168,9 +168,12 @@ class PlanSpec extends SparkSpec {
   test("ann_pq: ADC is one broadcast join on the query tables + partial top-k") {
     val df = SparkEntry.queries("ann_pq")(spark, sf)
     val p = df.queryExecution.sparkPlan.toString
-    // the one visible join broadcasts the |Q|·m·k distance-table stack
-    // (filtered to vec_id < 10); the corpus codes side streams
-    assert("BroadcastHashJoin".r.findAllIn(p).size == 1, p)
+    // the index build and the query batch are pqIndexFramesOf and
+    // pqQueryFromIndex: the corpus encode and the query scoring each
+    // broadcast the d-row codebook, and ADC broadcasts the |Q|·m·k
+    // distance-table stack (filtered to vec_id < 10); the corpus codes
+    // side streams
+    assert("BroadcastHashJoin".r.findAllIn(p).size == 3, p)
     assert(p.contains("< 10"), s"broadcast side is not the query tables:\n$p")
     assert(!p.contains("SortMergeJoin"), p)
     // Spark 4 plants a partial WindowGroupLimit: per-partition top-k
@@ -258,6 +261,18 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("BroadcastHashJoin"),
         s"[$key] corpus-derived broadcast in static plan:\n$p")
       assert(p.contains("ShuffledHashJoin"), s"[$key] no shuffle-hash join:\n$p")
+    }
+  }
+
+  test("ntileBanded plans its per-group bounds aggregate once: ntile_deciles, rfm_segmentation") {
+    for (key <- Seq("ntile_deciles", "rfm_segmentation")) {
+      val df = SparkEntry.queries(key)(spark, sf)
+      df.collect() // finalize AQE: a reused broadcast prints once
+      val p = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0)
+      val bounds = """HashAggregate\(keys=\[[^\]]*\], functions=\[min\(""".r
+        .findAllIn(p).size
+      assert(bounds == 1, s"[$key] $bounds bounds aggregates:\n$p")
     }
   }
 
